@@ -6,6 +6,8 @@ import graft.streaming.{MultiSlot, StreamingPipeline}
 import graft.streaming.MultiSlot.SlotSpec
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.{col, concat, lit, max, min, pmod, when}
+import org.apache.spark.sql.execution.streaming.runtime.{
+  AsyncProgressTrackingMicroBatchExecution => AsyncTracking}
 import java.nio.file.{Files, Paths}
 
 /** Benchmark main (driver contract): one JSON line with per-query seconds at
@@ -18,22 +20,21 @@ import java.nio.file.{Files, Paths}
   *  - `wal_drain` is the CDC headline: events rendered as pgoutput WAL
   *    (setup, untimed, DISTRIBUTED — no driver collect, so the render holds
   *    at any SF), then timed decode → convert → route → serialize → sink
-  *    drain through the streaming source in large micro-batches — the
-  *    reference's backlog-drain workload (tests/load/README.md). Per-batch
-  *    p50/p99 latency rides the listener. `wal_drain_{2,4}slot` drain the
-  *    same backlog split across N slots (the scale-out axis) with per-slot
-  *    confirmed-LSN isolation asserted; `wal_drain_wire` drains it through
-  *    the real wire producer (CRC32C RecordBatches, murmur2, flush-barrier
-  *    acks) against the scripted in-process broker, with the delivered
-  *    (topic, lsn) set checked against the file-mode sinks'.
+  *    drain through the streaming source in large micro-batches into the
+  *    parquet stand-in — the reference's backlog-drain workload
+  *    (tests/load/README.md). Per-batch p50/p99 latency rides the
+  *    listener. `wal_drain_wire` drains the same backlog through the
+  *    broker path `graft.Main` ships (`kafkaBootstrap = wire://…` →
+  *    WireFrameProducer: CRC32C RecordBatches, murmur2, flush-barrier
+  *    acks) against the scripted in-process broker; `wal_drain_{2,4}slot`
+  *    split it across N slots (the scale-out axis) on the same broker
+  *    path, with per-slot confirmed-LSN isolation asserted. Every drain's
+  *    delivered (topic, lsn) set is checked against the generator.
   *  - suite trials are INTERLEAVED: 3 round-robin passes over all queries,
   *    min per query — a minutes-long contention window on this box hits all
   *    queries equally instead of corrupting one query's min-of-3
   *  - `wal_drain_10x`: min-of-3 ~1M-event drains (10× replicated backlog,
   *    shifted ids) — the at-scale design point; excluded from the suite total
-  *  - `latency_floor_ms`: per-batch wall-clock at trigger=5 ms with 1-event
-  *    arrivals — the micro-batch floor quoted next to the reference's <10 ms
-  *    push-latency claim
   *  - GRAFT_BENCH_SCALE=N replicates the event backlog N× (shifted ids) for
   *    a larger drain without new fixtures; GRAFT_BENCH_10X=0 skips the 10×
   *    point.
@@ -49,8 +50,8 @@ object Bench {
   /** Wire-channel wrapper that accounts wall time blocked in `read()` —
     * i.e. waiting on the walsender's logical decode + network. Used by the
     * 10× live point so the artifact carries the server-side share of every
-    * recorded trial (the LiveDrainProfile finding, now recorded per-run
-    * instead of asserted from a one-off profile). */
+    * recorded trial (the read-wait split, recorded per-run instead of
+    * asserted from a one-off profile). */
   private final class TimedReadChannel(
       inner: graft.source.postgres.CopyBothChannel)
       extends graft.source.postgres.CopyBothChannel {
@@ -255,7 +256,7 @@ object Bench {
     // exact inverse asymmetry: the 2db/4db points sat FLAT while every
     // env-LESS point in the tier (live_drain, wal_drain, the floors)
     // drifted +16–35% unattributably — so r15 extends env rows to ALL of
-    // them (liveEnv below, walEnv/floorEnv in the drain/floor sections).
+    // them (liveEnv below, walEnv in the drain section).
     val live2dbEnv = scala.collection.mutable.Buffer.empty[EnvRow]
     val live4dbEnv = scala.collection.mutable.Buffer.empty[EnvRow]
     val live8dbEnv = scala.collection.mutable.Buffer.empty[EnvRow]
@@ -405,8 +406,8 @@ object Bench {
       if (c2) {
         // both attempts contaminated: rescue the min over ALL trials —
         // the verdict labels the number, nothing is hidden. Only phases
-        // whose tag IS a results entry (the drains); the floor/ann
-        // phases keep their own last-attempt headline vars.
+        // whose tag IS a results entry (the drains); the ann phase keeps
+        // its own last-attempt headline vars.
         val all = (t1 ++ t2).filter(_ > 0)
         if (all.nonEmpty && results.contains(tag)) {
           results(tag) = all.min
@@ -577,8 +578,8 @@ object Bench {
           }
           // ---- 10× live point: ~1M-row backlog through the same wire ----
           // FIXED 5 trials (was 1 — the single r7 trial is what made the
-          // 1.70× swing unexplainable). LiveDrainProfile instrumentation
-          // shows identical back-to-back trials swing 2× with gc=0, steal=0,
+          // 1.70× swing unexplainable). Read-wait profiling showed
+          // identical back-to-back trials swing 2× with gc=0, steal=0,
           // idle load and a 400+ MB/s disk — host-level variance the guest
           // cannot see — so the min needs enough trials to land in the true
           // capability band (~300k ev/s observed). Generation is server-side
@@ -711,7 +712,7 @@ object Bench {
           }
           // ---- database-sharded live point: the scale answer to the ----
           // ---- measured single-walsender decode bottleneck          ----
-          // LiveDrainProfile shows the live drain is ~90% blocked in
+          // Read-wait profiling shows the live drain is ~90% blocked in
           // channel.read(): server-side logical decode is single-threaded
           // per walsender. Slots of the SAME database cannot split that
           // work — every slot decodes the whole WAL and publications only
@@ -1093,9 +1094,6 @@ object Bench {
     var walWarmupConverged = false
     var drainEvents = 0L
     var drainEvents10 = 0L
-    var floorP50 = 0L; var floorP99 = 0L
-    var floorSyncP50 = 0L; var floorSyncP99 = 0L
-    var floorWireP50 = 0L; var floorWireP99 = 0L
     val walInsuiteTrialsRec = scala.collection.mutable.Buffer.empty[Double]
     // GRAFT_BENCH_DRAIN=0 skips the drain workloads cleanly (suite-focused
     // iteration); the driver's full run keeps the default.
@@ -1162,16 +1160,9 @@ object Bench {
       val metrics = new graft.metrics.GraftMetrics
       val listener = new graft.metrics.GraftQueryListener(metrics)
       spark.streams.addListener(listener)
-      // The headline drains deliver through the DSv2 frames sink with async
-      // progress tracking — the Kafka-FAITHFUL delivery stand-in: framed
-      // append + epoch flush barrier, the IO shape of a broker produce,
-      // with restart/redelivery pinned in FramesSinkSpec. Async moves only
-      // the offset/commit-log bookkeeping off the critical path; every
-      // batch's DATA still commits synchronously inside the epoch. The
-      // pre-r8 parquet stand-in (a columnar write the reference's Kafka
-      // produce never pays) continues as the `wal_drain_parquet` series for
-      // cross-round comparability; GRAFT_BENCH_SINK=parquet restores it as
-      // the headline.
+      // The headline drains write the parquet stand-in (the no-broker
+      // output); `wal_drain_wire` and the N-slot drains below deliver
+      // through the broker path graft.Main ships.
       // Fixture-truth delivered-set size (r17 VERDICT #1): the expected
       // distinct (topic, lsn) count derives from the GENERATOR — one routed
       // frame per (event × matching stream), computed by the SAME broadcast
@@ -1192,8 +1183,7 @@ object Bench {
             .otherwise(lit("DELETE")).as("op")),
         Routing.streamsDF(spark, Routing.fixtureStreams)).count()
       def oneDrain(src: DataFrame, lo: Long, hi: Long, cut: Long,
-          nSegs: Int, frames: Boolean, async: Boolean = true,
-          wire: Option[graft.FakeKafkaBroker] = None): Double = {
+          nSegs: Int, wire: Option[graft.FakeKafkaBroker] = None): Double = {
         // computed once per backlog, BEFORE the trial (off the timed path)
         val expected = expectedByBacklog.getOrElseUpdate(lo -> hi,
           expectedFrames(src))
@@ -1211,9 +1201,7 @@ object Bench {
           kafkaBootstrap = wire.map(b => s"wire://localhost:${b.port}"),
           triggerMs = 0L,
           maxEventsPerBatch = Int.MaxValue,
-          sliceEvents = sys.env.getOrElse("GRAFT_BENCH_SLICE", "3000").toInt,
-          sinkFormat = if (frames) "frames" else "parquet",
-          asyncProgress = frames && async)
+          sliceEvents = sys.env.getOrElse("GRAFT_BENCH_SLICE", "3000").toInt)
         q.processAllAvailable() // prime: startup + first segment
         renderRange(src, walDir, cut + 1, hi, 1, nSegs)
         val t0 = System.nanoTime()
@@ -1222,22 +1210,14 @@ object Bench {
         q.stop()
         // honesty check (off the timed path): the delivered SET — distinct
         // routed frames by (topic, lsn) — must equal the FIXTURE-DERIVED
-        // expected count on every trial, across BOTH sinks. A mismatch throws;
+        // expected count on every trial, on both outputs. A mismatch throws;
         // the per-trial isolation in the callers records that trial as -1.0
         // (disqualified — it never enters the min) and runs the next trial,
         // so one lost-frame trial is visible in the trial list without
-        // aborting the whole workload. The frames read includes
-        // uncommitted-epoch part files: with async progress a stop() can
-        // race the FINAL epoch's marker write (data durable, bookkeeping
-        // behind — the documented at-least-once window), and the
-        // committed-only count showed exactly that trial-to-trial 127-frame
-        // wobble. Distinct-by-(lsn, topic) absorbs the redelivery side of
-        // the same window.
+        // aborting the whole workload. Distinct-by-(lsn, topic) absorbs
+        // at-least-once redelivery on the broker path.
         val delivered = wire match {
           case Some(b) => b.deliveredLsn.size.toLong // broker-side (topic, lsn) set
-          case None if frames => graft.sink.frames.FramesLog
-            .read(spark, outDir, includeUncommitted = true)
-            .select("topic", "lsn").distinct().count()
           case None => spark.read.parquet(outDir)
             .select("topic", "lsn").distinct().count()
         }
@@ -1250,10 +1230,8 @@ object Bench {
         // ~34 GB without this (observed r11); deletion is off the timed path
         } finally Seq(walDir, outDir, ckptDir).foreach(rmRf)
       }
-      val framesHeadline =
-        sys.env.getOrElse("GRAFT_BENCH_SINK", "frames") == "frames"
-      def headlineDrain(frames: Boolean): Double = oneDrain(ev, minId, maxId,
-        primeCut, if (scale > 1) 4 * scale else 1, frames)
+      def headlineDrain(): Double = oneDrain(ev, minId, maxId,
+        primeCut, if (scale > 1) 4 * scale else 1)
       // min of 5 — the reference's own committed-baseline methodology
       // (tests/benchmarks/baseline/components.json is min-of-5); this box's
       // contention makes fewer trials noticeably upward-biased. Per-trial
@@ -1285,7 +1263,7 @@ object Bench {
           while (!steady && walWarmupTrials.size - warmBase < 5) {
             val c0 = cpuNanos()
             val t =
-              try headlineDrain(framesHeadline)
+              try headlineDrain()
               catch { case e: Throwable =>
                 System.err.println(s"[bench] $hdLabel warm-up failed: $e")
                 -1.0
@@ -1327,7 +1305,7 @@ object Bench {
           // load history is the thing it measures.
           if (!insuite && i > 1) waitQuiet(1.0, 90)
           val (t, env) = envTrial(
-            try headlineDrain(framesHeadline)
+            try headlineDrain()
             catch { case e: Throwable =>
               System.err.println(s"[bench] $hdLabel trial $i failed: $e")
               e.printStackTrace()
@@ -1360,23 +1338,12 @@ object Bench {
       if (insuite) hdAttempt() else auditPhase("wal_drain")(() => hdAttempt())
       spark.streams.removeListener(listener)
       if (insuite) return // the drift point needs only the headline
-      if (framesHeadline) {
-        // the pre-r8 parquet-stand-in series, kept for cross-round
-        // comparability (min-of-3: it is no longer the headline)
-        val pqOk = (1 to 3).map { i =>
-          try headlineDrain(frames = false)
-          catch { case e: Throwable =>
-            System.err.println(s"[bench] wal_drain_parquet trial $i failed: $e")
-            recErr("wal_drain_parquet", e)
-            -1.0
-          }
-        }.filter(_ > 0)
-        val pq = if (pqOk.nonEmpty) pqOk.min else -1.0
-        results("wal_drain_parquet") = pq
-        if (pqOk.nonEmpty) System.err.println(
-          f"[bench] wal_drain_parquet: $drainEvents events in $pq%.2f s = " +
-            f"${drainEvents / pq}%.0f events/s (pre-r8 headline series)")
-      }
+
+      // the scripted in-process broker every broker-path drain delivers to;
+      // retain = false keeps only the delivered (topic, lsn) set
+      def fixtureBroker() = new graft.FakeKafkaBroker(Map(
+        "cdc.click" -> 4, "cdc.purchase" -> 4, "cdc.signup" -> 4,
+        "cdc.view" -> 4), retain = false)
 
       // -------- N-slot drain (scale-out axis: near-linear per slot) ------
       // The backlog splits into N contiguous event_id ranges, one slot
@@ -1392,6 +1359,7 @@ object Bench {
         val outDir = Files.createTempDirectory("graft-bench-outn").toString
         val ckptDir = Files.createTempDirectory("graft-bench-ckptn").toString
         val cleanup = scala.collection.mutable.Buffer(outDir, ckptDir)
+        val broker = fixtureBroker()
         try {
         val span = maxId - minId + 1
         val ranges = (0 until n).map { i =>
@@ -1406,9 +1374,9 @@ object Bench {
           renderRange(ev, w, lo, lo + 999, 0, 1) }
         val handles = MultiSlot.start(spark,
           wals.zipWithIndex.map { case (w, i) => SlotSpec(s"s$i", w) },
-          Routing.fixtureStreams, ckptDir, outDir, triggerMs = 0L,
-          maxEventsPerBatch = Int.MaxValue, sliceEvents = 3000,
-          sinkFormat = if (framesHeadline) "frames" else "parquet")
+          Routing.fixtureStreams, ckptDir, outDir,
+          kafkaBootstrap = Some(s"wire://localhost:${broker.port}"),
+          triggerMs = 0L, maxEventsPerBatch = Int.MaxValue, sliceEvents = 3000)
         MultiSlot.drainAll(handles) // prime every slot
         val segsPerSlot = if (scale > 1) math.max(1, 4 * scale / n) else 1
         ranges.zip(wals).foreach { case ((lo, hi), w) =>
@@ -1425,29 +1393,19 @@ object Bench {
         case _ => () }
         MultiSlot.stopAll(handles)
         // fixture-truth delivered set (off the timed path), the oneDrain
-        // invariant applied to the N-slot shape: all slots append into ONE
-        // outDir, and the union of their disjoint ranges is the whole
+        // invariant applied to the N-slot shape: all slots deliver to ONE
+        // broker, and the union of their disjoint ranges is the whole
         // backlog — distinct (topic, lsn) must equal the generator's
         // routed-pair count. The multi-segment-per-slot renders (scale>1)
         // were exposed to the same visibility race oneDrain was.
         val expectedN = expectedByBacklog.getOrElseUpdate(minId -> maxId,
           expectedFrames(ev))
-        // each slot appends under outDir/slot=<name>; slot ranges are
-        // disjoint (LSNs derive from event_id), so per-slot distinct
-        // counts sum to the whole backlog's distinct count
-        val deliveredN = ranges.indices.map { i =>
-          val d = s"$outDir/slot=s$i"
-          if (framesHeadline) graft.sink.frames.FramesLog
-            .read(spark, d, includeUncommitted = true)
-            .select("topic", "lsn").distinct().count()
-          else spark.read.parquet(d)
-            .select("topic", "lsn").distinct().count()
-        }.sum
+        val deliveredN = broker.deliveredLsn.size.toLong
         require(deliveredN == expectedN,
           s"$n-slot drain delivered $deliveredN frames, fixture expects " +
             s"$expectedN (${expectedN - deliveredN} missing)")
         secs
-        } finally cleanup.foreach(rmRf)
+        } finally { broker.close(); cleanup.foreach(rmRf) }
       }
       Seq(2, 4).foreach { n =>
         val label = s"wal_drain_${n}slot"
@@ -1468,22 +1426,19 @@ object Bench {
       }
 
       // -------- wire drain: headline backlog through the REAL producer ----
-      // The frames-file sink is the IO *shape* of a produce; this point runs
-      // the actual K1 path — per-task WireProducer sockets, message-format-v2
-      // RecordBatches, CRC32C, murmur2 partitioning, flush-barrier acks —
-      // against the scripted in-process broker (which re-verifies CRC32C on
-      // every batch). Prices codec + framing + round-trips into a recorded
-      // number; the delivered (topic, lsn) SET must equal the file-mode
-      // sinks' set for the same backlog (same fixture-derived expected count).
+      // The headline backlog through the broker path graft.Main ships —
+      // `kafkaBootstrap = wire://…` → WireFrameProducer under foreachBatch:
+      // per-task WireProducer sockets, message-format-v2 RecordBatches,
+      // CRC32C, murmur2 partitioning, flush-barrier acks — against the
+      // scripted in-process broker (which re-verifies CRC32C on every
+      // batch). The delivered (topic, lsn) SET must equal the
+      // fixture-derived expected count, as on the parquet headline.
       if (sys.env.getOrElse("GRAFT_BENCH_WIRE", "1") != "0") {
-        val broker = new graft.FakeKafkaBroker(Map(
-          "cdc.click" -> 4, "cdc.purchase" -> 4, "cdc.signup" -> 4,
-          "cdc.view" -> 4), retain = false)
+        val broker = fixtureBroker()
         try {
           val wt = (1 to 3).map { i =>
             try oneDrain(ev, minId, maxId, primeCut,
-              if (scale > 1) 4 * scale else 1, frames = true,
-              wire = Some(broker))
+              if (scale > 1) 4 * scale else 1, wire = Some(broker))
             catch { case e: Throwable =>
               System.err.println(s"[bench] wal_drain_wire trial $i failed: $e")
               e.printStackTrace()
@@ -1549,8 +1504,7 @@ object Bench {
             while (!steady && wal10WarmupTrials.size - warmBase < 3) {
               val c0 = cpuNanos()
               val t =
-                try oneDrain(ev10, min10, max10, min10 + 999, 40,
-                  framesHeadline, async = false)
+                try oneDrain(ev10, min10, max10, min10 + 999, 40)
                 catch { case e: Throwable =>
                   System.err.println(s"[bench] wal_drain_10x warm-up failed: $e")
                   -1.0
@@ -1600,8 +1554,7 @@ object Bench {
           val t10 = (1 to 5).map { i =>
             if (i > 1) waitQuiet(1.0, 90)
             val (t, env) = envTrial(
-              try oneDrain(ev10, min10, max10, min10 + 999, 40,
-                framesHeadline, async = false)
+              try oneDrain(ev10, min10, max10, min10 + 999, 40)
               catch { case e: Throwable =>
                 System.err.println(s"[bench] wal_drain_10x trial $i failed: $e")
                 e.printStackTrace()
@@ -1644,223 +1597,6 @@ object Bench {
     }
     if (runDrain) drainWorkloads(insuite = false)
 
-
-    // -------- latency floor: tiny trigger, single-event segments --------
-    // The micro-batch latency floor (per-batch wall-clock at trigger=5 ms
-    // with one event per arrival) — the honest number to quote next to the
-    // reference's <10 ms push-latency design claim: a micro-batch engine
-    // cannot beat its per-batch fixed cost, and this measures exactly that.
-    // Independently gated (GRAFT_BENCH_FLOOR=1 with the drains off) so a
-    // contention-sensitive p99 can be re-measured alone on a quiet box.
-    val runFloor = sys.env.getOrElse("GRAFT_BENCH_FLOOR",
-      if (runDrain) "1" else "0") != "0"
-    // per-(variant, pass) env rows for all three floor variants
-    val floorEnv = scala.collection.mutable.Buffer.empty[(String, Int, EnvRow)]
-    // per-(variant, pass) (p50, p99) — every pass lands in the artifact
-    val floorPassRows =
-      scala.collection.mutable.Buffer.empty[(String, Int, Long, Long)]
-    // per-(variant, pass) durationMs medians (r18 breakdown)
-    val floorBreakdownRows =
-      scala.collection.mutable.Buffer.empty[(String, Int, Map[String, Long])]
-    var lastFloorBreakdown = Map.empty[String, Long]
-    // committed cross-run async-p50 baseline (ms): recorded r13 34, r15
-    // provisional band 38–56 — drift beyond 1.3× this trips the gate
-    val FloorAsyncP50BaselineMs = 40.0
-    var floorGateVerdict = "unavailable"
-    if (runFloor) {
-      // pass 1 absorbs JIT/codegen/stream-startup (a cold first micro-batch
-      // costs seconds and would swallow the whole arrival window into one
-      // batch) and is never the headline — r8's recorded 1-pass floor read
-      // 207 ms async because cold-start swallowed the win; the suite's
-      // warm-up runs queries, not streams, so it does not warm this path.
-      // r16 (r15 VERDICT #3): the recorded floors ratcheted up three
-      // consecutive rounds (async p50 34 → 46 → 54 ms) while provisional
-      // runs spanned 38–56 — the old last-pass-of-2 policy was a SINGLE
-      // sample of a wide inter-run band that kept drawing the slow edge.
-      // Now: 4 passes default (1 cold + 3 recorded), every pass's
-      // per-variant p50/p99 lands in the artifact, the headline is the
-      // MIN-p50 recorded pass per variant (its p99 from the same pass),
-      // and a committed cross-run baseline gates drift like the live-10×
-      // ceiling does.
-      val passes = sys.env.getOrElse("GRAFT_BENCH_FLOOR_PASSES", "4").toInt
-      // Two floor variants per pass:
-      //  - async DSv2 frames sink (the headline `latency_floor_ms`): offset
-      //    and commit log writes off the critical path — the directive's
-      //    latency fix, valid at the engine's at-least-once contract
-      //  - sync parquet stand-in (`latency_floor_sync_ms`): the pre-r8
-      //    number, kept so the async win is measured against its own round,
-      //    not remembered from a previous one
-      //  - wire DSv2 producers against the scripted broker
-      //    (`latency_floor_wire_ms`): the end-to-end Kafka-path floor —
-      //    real codec + socket + ack round-trip per batch, pooled
-      //    connections (WireProducerPool), async progress
-      def floorOnce(sinkFormat: String, async: Boolean,
-          wire: Option[graft.FakeKafkaBroker] = None): (Long, Long) = {
-        val metricsF = new graft.metrics.GraftMetrics
-        val listenerF = new graft.metrics.GraftQueryListener(metricsF)
-        spark.streams.addListener(listenerF)
-        // per-component medians (r18, the ann_serve breakdown applied to
-        // the floors): itemizes each pass's batchDuration into
-        // latestOffset / getBatch / planning / addBatch / walCommit /
-        // commitOffsets so floor drift is attributable to a COMPONENT
-        val durRowsF =
-          scala.collection.mutable.Buffer.empty[Map[String, Long]]
-        val lDurF = new org.apache.spark.sql.streaming.StreamingQueryListener {
-          override def onQueryStarted(e: org.apache.spark.sql.streaming
-            .StreamingQueryListener.QueryStartedEvent): Unit = ()
-          override def onQueryProgress(e: org.apache.spark.sql.streaming
-              .StreamingQueryListener.QueryProgressEvent): Unit = {
-            import scala.jdk.CollectionConverters._
-            // data batches only: idle triggers carry a near-zero
-            // triggerExecution that would skew the medians vs the
-            // latency metric's population
-            if (e.progress.numInputRows > 0) durRowsF.synchronized {
-              durRowsF += e.progress.durationMs.asScala
-                .map { case (k, v) => k -> v.longValue() }.toMap
-            }
-          }
-          override def onQueryTerminated(e: org.apache.spark.sql.streaming
-            .StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-        }
-        spark.streams.addListener(lDurF)
-        val debugL = if (sys.env.get("GRAFT_BENCH_FLOOR_DEBUG").contains("1")) {
-          val l = new org.apache.spark.sql.streaming.StreamingQueryListener {
-            override def onQueryStarted(e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryStartedEvent): Unit = ()
-            override def onQueryProgress(e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent): Unit =
-              System.err.println(s"[floor-debug $sinkFormat async=$async] " +
-                s"total=${e.progress.batchDuration} ${e.progress.durationMs}")
-            override def onQueryTerminated(e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-          }
-          spark.streams.addListener(l); Some(l)
-        } else None
-        val walDir = Files.createTempDirectory("graft-bench-floor-wal").toString
-        val outDir = Files.createTempDirectory("graft-bench-floor-out").toString
-        val ckptDir = Files.createTempDirectory("graft-bench-floor-ckpt").toString
-        try {
-          val q = StreamingPipeline.start(spark, walDir, Routing.fixtureStreams,
-            ckptDir, outDir,
-            kafkaBootstrap = wire.map(b => s"wire://localhost:${b.port}"),
-            triggerMs = 5L,
-            sinkFormat = sinkFormat, asyncProgress = async)
-          var seg = 0
-          (1 to 120).foreach { i =>
-            // one event per segment, re-announced relations (fresh session shape)
-            val seen = scala.collection.mutable.Set.empty[String]
-            val frames = WalFixture.frames(WalFixture.Ev(1000000L + i,
-              1700000000000000L + i * 1000L, i % 7, "click", i * 0.5, "{}"), seen)
-            WalLog.write(Paths.get(walDir, f"$seg%08d.wal"), frames)
-            seg += 1
-            Thread.sleep(15)
-          }
-          q.processAllAvailable()
-          q.stop()
-          lastFloorBreakdown = durRowsF.synchronized {
-            durRowsF.flatMap(_.keys).distinct.map { k =>
-              val vs = durRowsF.flatMap(_.get(k)).sorted
-              k -> (if (vs.isEmpty) 0L else vs(vs.size / 2))
-            }.toMap
-          }
-          metricsF.batchLatencyMs
-        } finally {
-          debugL.foreach(spark.streams.removeListener)
-          spark.streams.removeListener(listenerF)
-          spark.streams.removeListener(lDurF)
-          Seq(walDir, outDir, ckptDir).foreach(rmRf)
-        }
-      }
-      val floorBroker =
-        if (sys.env.getOrElse("GRAFT_BENCH_FLOOR_WIRE", "1") != "0")
-          Some(new graft.FakeKafkaBroker(Map(
-            "cdc.click" -> 4, "cdc.purchase" -> 4, "cdc.signup" -> 4,
-            "cdc.view" -> 4), retain = false))
-        else None
-      // the whole floor phase (passes + headline + gate) is ONE auditable
-      // attempt: the r16 recorded floors ran at load 6.2–9.2 (r15: ~1.0) —
-      // the loudest contamination signal in that artifact — and the gate,
-      // while honest, priced a loaded box into the committed-baseline
-      // comparison. A contaminated attempt re-runs once; headline vars are
-      // recomputed from the retry's rows only.
-      def floorAttempt(): (Seq[Double], Seq[EnvRow], Boolean) = {
-      val prBase = floorPassRows.size
-      val envA = scala.collection.mutable.Buffer.empty[EnvRow]
-      try (1 to passes).foreach { pass =>
-        try {
-          // one env row per variant per pass (r14 VERDICT #1: all three
-          // floors drifted +23–35% with no fields to attribute it; the
-          // floor is ~2 s of wall per variant, so cpu-vs-wall separates a
-          // starved box from a client that got slower per batch)
-          def floorEnvTrial(variant: String, run: => (Long, Long)): (Long, Long) = {
-            var out = (0L, 0L)
-            val (_, env) = envTrial { out = run; 0.0 }
-            floorEnv += ((variant, pass, env))
-            envA += env
-            floorPassRows += ((variant, pass, out._1, out._2))
-            floorBreakdownRows += ((variant, pass, lastFloorBreakdown))
-            out
-          }
-          val (sp50, sp99) = floorEnvTrial("sync", floorOnce("parquet", async = false))
-          val (ap50, ap99) = floorEnvTrial("async", floorOnce("frames", async = true))
-          val (wp50, wp99) = floorBroker match {
-            case Some(b) =>
-              floorEnvTrial("wire", floorOnce("frames", async = true, wire = Some(b)))
-            case None => (0L, 0L)
-          }
-          System.err.println(
-            s"[bench] latency_floor pass $pass/$passes (trigger=5ms, " +
-              s"1-event batches): async-frames p50=${ap50}ms p99=${ap99}ms, " +
-              s"sync-parquet p50=${sp50}ms p99=${sp99}ms, " +
-              s"wire p50=${wp50}ms p99=${wp99}ms")
-        } catch { case e: Throwable =>
-          // p50=0 in the JSON means "not measured", never "sub-ms floor"
-          System.err.println(s"[bench] latency_floor failed: ${e.getMessage}")
-          recErr("latency_floor", e)
-        }
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] latency_floor pass loop failed: $e")
-        recErr("latency_floor", e)
-      }
-      // headline per variant = the MIN-p50 RECORDED pass of THIS attempt
-      // (pass ≥ 2 when more than one pass ran; its p99 rides from the same
-      // pass so the pair stays coherent) — min-of-passes is the drain
-      // points' policy applied to the floors
-      val attemptRows = floorPassRows.drop(prBase)
-      def headlineOf(variant: String): (Long, Long) = {
-        val rec = attemptRows.filter(r =>
-          r._1 == variant && (passes == 1 || r._2 >= 2) && r._3 > 0)
-        if (rec.isEmpty) (0L, 0L)
-        else { val best = rec.minBy(_._3); (best._3, best._4) }
-      }
-      val (ap, ap9) = headlineOf("async"); floorP50 = ap; floorP99 = ap9
-      val (sp, sp9) = headlineOf("sync"); floorSyncP50 = sp; floorSyncP99 = sp9
-      val (wp, wp9) = headlineOf("wire"); floorWireP50 = wp; floorWireP99 = wp9
-      // committed cross-run baseline gate (the live_drain_10x_ceiling
-      // pattern): recorded async p50 was 34 ms (r13) with same-day
-      // provisional bands 38–56 (r15) — baseline 40 ms, breach at >1.3×.
-      // A breach never hides the number; the artifact carries the verdict
-      // so three silent ratchets (r13→r15) can't happen again.
-      floorGateVerdict =
-        if (floorP50 <= 0) "unavailable"
-        else if (floorP50 <= FloorAsyncP50BaselineMs * 1.3) "pass"
-        else "breach"
-      System.err.println(s"[bench] latency_floor headline (min-p50 " +
-        s"recorded pass): async p50=${floorP50}ms p99=${floorP99}ms, " +
-        s"sync p50=${floorSyncP50}ms, wire p50=${floorWireP50}ms; " +
-        s"gate vs ${FloorAsyncP50BaselineMs} ms × 1.3 → $floorGateVerdict")
-      // scatter clause input: this attempt's RECORDED async-p50 passes.
-      // A committed-baseline gate BREACH dirties the attempt (r17): the
-      // r17_full4 run breached at 58 ms with a clean audit (quiet box,
-      // flat passes) right after a box-heating full test suite — the
-      // transient post-saturation drift class that ratcheted r13–r15
-      // gets ONE bounded re-measure; a real regression breaches twice
-      // and lands labeled in both the gate verdict and the phase audit.
-      (attemptRows.filter(r => r._1 == "async" && r._3 > 0)
-        .map(_._3.toDouble).toSeq, envA.toSeq,
-        floorGateVerdict == "breach")
-      }
-      try auditPhase("latency_floor")(() => floorAttempt())
-      finally floorBroker.foreach(_.close())
-    }
-
     // -------- ANN streaming serving point (r15 VERDICT #6) --------
     // `AnnServeStream` (the stateless foreachBatch ANN serving twin) gets
     // a MEASURED number next to the reference's <10 ms push-latency
@@ -1868,9 +1604,9 @@ object Bench {
     // 1-query arrivals, plus end-to-end queries/s, served against the
     // broadcast TRAINED index. The index builds UNTIMED (serving, not
     // training, is the rung); 2 passes, pass 1 absorbs stream/JIT
-    // cold-start and pass 2 records — the floor protocol.
+    // cold-start and pass 2 records.
     val runAnn = sys.env.getOrElse("GRAFT_BENCH_ANN",
-      if (runFloor) "1" else "0") != "0"
+      if (runDrain) "1" else "0") != "0"
     var annServeQps = -1.0
     var annServeP50 = 0L; var annServeP99 = 0L
     // batched-arrival variant (8 queries per micro-batch): the 1-query
@@ -1933,9 +1669,9 @@ object Bench {
         // `asyncTrack` (r17 VERDICT #4): the breakdown showed walCommit +
         // commitOffsets ≈ 60-70 ms of the ~160 ms noop floor — offset and
         // commit log writes on the batch's critical path. Spark ships
-        // exactly this fix as async progress tracking; its certified sink
-        // list is Kafka/Memory, so the foreachBatch serving sink needs the
-        // documented override option. That is SOUND here: serving is a
+        // exactly this fix as async progress tracking, which admits
+        // foreachBatch through its sink-check override (see
+        // StreamingPipeline.start). That is SOUND here: serving is a
         // read-only side effect (idempotent query answers — at-least-once
         // re-serving after a restart returns the same rows), and batch
         // COMPLETENESS is enforced separately (the served counter must
@@ -1965,7 +1701,9 @@ object Bench {
             override def onQueryProgress(e: org.apache.spark.sql.streaming
                 .StreamingQueryListener.QueryProgressEvent): Unit = {
               import scala.jdk.CollectionConverters._
-              // data batches only (see the floor listener's note)
+              // data batches only: idle triggers carry a near-zero
+              // triggerExecution that would skew the medians vs the
+              // latency metric's population
               if (e.progress.numInputRows > 0) durRows.synchronized {
                 durRows += e.progress.durationMs.asScala
                   .map { case (k, v) => k -> v.longValue() }.toMap
@@ -2017,9 +1755,11 @@ object Bench {
               .trigger(org.apache.spark.sql.streaming.Trigger
                 .ProcessingTime(5L))
             val w = if (!asyncTrack) w0 else w0
-              .option("asyncProgressTrackingEnabled", "true")
-              .option("asyncProgressTrackingCheckpointIntervalMs", "1000")
-              .option("_asyncProgressTrackingOverrideSinkSupportCheck", "true")
+              .option(AsyncTracking.ASYNC_PROGRESS_TRACKING_ENABLED, "true")
+              .option(AsyncTracking
+                .ASYNC_PROGRESS_TRACKING_CHECKPOINTING_INTERVAL_MS, "1000")
+              .option(AsyncTracking
+                .ASYNC_PROGRESS_TRACKING_OVERRIDE_SINK_SUPPORT_CHECK, "true")
             val q = w.foreachBatch { (b: org.apache.spark.sql.Dataset[Row],
                   _: Long) =>
                 val c = if (noop) b.count()
@@ -2083,7 +1823,7 @@ object Bench {
               f"p50=${out._1}ms p99=${out._2}ms qps=${out._3}%.1f")
           }
           // the amortization points ride the already-warm serving path —
-          // one recorded pass each is the floor protocol's pass-2
+          // one recorded pass each is the 2-pass protocol's pass-2
           // equivalent. batch=64 (r16 VERDICT #5) completes the curve:
           // 1 → 8 → 64 queries per micro-batch over the same prepared
           // index (128 queries = two 64-query batches, so the p50 is a
@@ -2312,7 +2052,7 @@ object Bench {
     }
 
     // ---------------- per-query suite (AFTER the headline drains) ---------
-    // The drain/floor headlines above run in this fresh forked JVM BEFORE
+    // The drain headlines above run in this fresh forked JVM BEFORE
     // the suite touches the heap — the same conditions as the standalone
     // protocol (GRAFT_BENCH_SUITE=0), so their bands are comparable to the
     // README ladder and immune to suite heap history (r9/r10 observed
@@ -2569,7 +2309,7 @@ object Bench {
       s""""wal_drain_latency_ms":{"p50":$latencyP50,"p99":$latencyP99},""" +
       s""""wal_drain_trials":[${walTrialsRec.map(r3).mkString(",")}],""" +
       s""""wal_drain_insuite_trials":[${walInsuiteTrialsRec.map(r3).mkString(",")}],""" +
-      s""""headline_isolation":"drains+floor run pre-suite on the fresh forked JVM; wal_drain_insuite re-measures post-suite",""" +
+      s""""headline_isolation":"drains run pre-suite on the fresh forked JVM; wal_drain_insuite re-measures post-suite",""" +
       s""""errors":${errs.map { case (k, v) =>
         jstr(k) + ":" + v.map(jstr).mkString("[", ",", "]")
       }.mkString("{", ",", "}")},""" +
@@ -2615,9 +2355,6 @@ object Bench {
       s""""live_drain_2x4_env":[${live2x4Env.map(_.json).mkString(",")}],""" +
       s""""live_load_avg":{"before":${r3(liveLoadBefore)},"after":${r3(liveLoadAfter)}},""" +
       s""""live_load_guard":{"wait_s":${r3(liveLoadWaitS)},"verdict":"$liveLoadVerdict"},""" +
-      s""""latency_floor_ms":{"p50":$floorP50,"p99":$floorP99},""" +
-      s""""latency_floor_sync_ms":{"p50":$floorSyncP50,"p99":$floorSyncP99},""" +
-      s""""latency_floor_wire_ms":{"p50":$floorWireP50,"p99":$floorWireP99},""" +
       s""""ann_serve_qps":${r3(annServeQps)},""" +
       s""""ann_serve_batch_ms":{"p50":$annServeP50,"p99":$annServeP99},""" +
       s""""ann_serve_qps_b8":${r3(annServeQpsB8)},""" +
@@ -2655,24 +2392,6 @@ object Bench {
       s""""qps":${r3(annIngestQps)},"decisions":[${annIngestDecisions
         .map(jstr).mkString(",")}],"flips":$annIngestFlips""" +
       annIngestEnv.fold("")(e => s""","env":${e.json}""") + "}," +
-      s""""latency_floor_passes_ms":[${floorPassRows.map {
-        case (variant, pass, p50, p99) =>
-          s"""{"variant":"$variant","pass":$pass,"p50":$p50,"p99":$p99}"""
-      }.mkString(",")}],""" +
-      s""""latency_floor_gate":{"async_p50_baseline_ms":${
-        r3(FloorAsyncP50BaselineMs)},"factor":1.3,""" +
-      s""""recorded_p50":$floorP50,"verdict":"$floorGateVerdict"},""" +
-      s""""latency_floor_env":[${floorEnv.map { case (variant, pass, env) =>
-        s"""{"variant":"$variant","pass":$pass,${env.json.tail}"""
-      }.mkString(",")}],""" +
-      // r18: per-(variant, pass) durationMs medians — floor drift is now
-      // attributable to a batch COMPONENT, not just an env row
-      s""""latency_floor_breakdown":[${floorBreakdownRows
-        .map { case (variant, pass, bd) =>
-          s"""{"variant":"$variant","pass":$pass,"ms":{${bd.toSeq
-            .sortBy(-_._2).map { case (k, v) => s"${jstr(k)}:$v" }
-            .mkString(",")}}}"""
-        }.mkString(",")}],""" +
       s""""suite_pass_totals":[${passTotals.map(r3).mkString(",")}],""" +
       s""""suite_pass_load":[${passLoad.map(r3).mkString(",")}],""" +
       s""""suite_pass_gc_ms":[${passGcMs.mkString(",")}],""" +

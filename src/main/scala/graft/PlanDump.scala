@@ -37,8 +37,7 @@ object PlanDump {
         // Execute to the noop sink first (default): AQE finalizes the plan
         // (SMJ→BHJ conversions, coalesced reads), so the dump shows the
         // plan that actually ran, not the initial estimate.
-        if (sys.env.getOrElse("GRAFT_PLAN_EXEC", "1") != "0")
-          df.write.format("noop").mode("overwrite").save()
+        df.write.format("noop").mode("overwrite").save()
         val plan = df.queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode)
         Files.write(Paths.get(outDir, s"${name}_$tag.txt"),

@@ -372,8 +372,9 @@ object ScaleSmoke {
         if (c0 < 0) -1.0 else (cpuNanos() - c0) / 1e9, secs, gcMs() - g0))
       val big = try shape(out) catch { case _: Throwable => "n/a" }
       // the shape probes + timed run each registered this query's owned
-      // checkpoints (localCheckpoint is eager, so even plan-only probes
-      // materialize); consumed now — release before the next rung query
+      // checkpoints (lazy by default: plan-only probes run only AQE's
+      // intermediate stages, but still register frames the sweep must
+      // reclaim); consumed now — release before the next rung query
       graft.util.Checkpoints.releaseOwned(spark)
       val flip = if (small != big) "  PLAN-FLIP" else ""
       f"$name%-30s $secs%7.2fs  $r%s$flip%n    sf0.1: $small%n    sf~1 : $big"

@@ -110,9 +110,8 @@ object Components {
     // the full node set aside so they surface in the output as their own
     // component, exactly like the propagation variant. Safe lazily (r20):
     // p stays cached until the harness's post-consumption sweep, so the
-    // returned plan's nodes→p read always finds live blocks — the in-loop
-    // release(p) below is a guarded no-op (p is never FINALIZED: counts
-    // finalize only their nearest-marked round frame).
+    // returned plan's nodes→p read always finds live blocks; p is never
+    // released in the loop (the sweep reclaims it).
     val nodes = graft.util.Checkpoints.ownedCheckpoint(
       p.select(col("pu").as("node"))
         .union(p.select(col("pv").as("node"))).distinct())
@@ -122,7 +121,6 @@ object Components {
           least(col("pu"), col("pv")).as("v"))
         .distinct())
     var changed = 1L
-    var pReleased = false
     while (changed > 0) {
       // large-star: m(x) = min over x's closed neighborhood; every neighbor
       // y > x re-points to m(x). Output keeps u > v (y > x ≥ m(x)).
@@ -156,10 +154,7 @@ object Components {
         .filter(col("l").isNull || col("r").isNull).count()
       // the convergence count was round R−1's last read — release it (the
       // final round's `small` stays: the label join below reads it).
-      // Round 1's count also materialized the initial lazy edge chain off
-      // p, so p's blocks become releasable exactly here.
       graft.util.Checkpoints.release(edges)
-      if (!pReleased) { graft.util.Checkpoints.release(p); pReleased = true }
       edges = small
     }
     // at fixpoint each non-center node carries exactly one star edge to its

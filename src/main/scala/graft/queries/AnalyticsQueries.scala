@@ -1578,8 +1578,11 @@ object AnalyticsQueries {
         .groupBy(col("user_id"))
         .agg(sort_array(collect_set(col("day_us"))).as("days"))
       // try_element_at (1-based) instead of days[i+1]: under ANSI mode a
-      // bare out-of-bounds index on the last element would crash; NULL
-      // falls through the OR exactly as the absent-next-day case
+      // bare out-of-bounds index on the last element would crash. NULL is
+      // unreachable for i < size-1; the last element is classified churned
+      // by the explicit size check, not by NULL propagation (a bare NULL
+      // disjunct would make the CASE yield 0 — dropping the size check
+      // would flip the last day to not-churned)
       val flags = perUser.select(explode(expr(
           "transform(days, (d, i) -> struct(d AS day_us, " +
             "CASE WHEN i = size(days) - 1 " +

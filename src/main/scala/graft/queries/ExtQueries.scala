@@ -2481,7 +2481,7 @@ object ExtQueries {
       // r20 A/B, reverted: fanning this checkpoint to 32 partitions
       // (hypothesis: the broadcast-joined L2 legs inherit the single-task
       // scan layout) measured ~2x SLOWER across the whole sim tier
-      // (min-of-5, GRAFT_FANOUT on/off: recall 1.99->4.40, trained
+      // (min-of-5, fan-out on/off: recall 1.99->4.40, trained
       // 0.91->2.21, pq_train 0.99->1.74, rerank_trained 1.53->2.94) — the
       // added keyless repartition (with its sort-before-repartition pass
       // over 512 B array rows) plus 32x the per-stage task count through
@@ -3866,10 +3866,8 @@ object ExtQueries {
       // granule on one executor core) with measured-zero overhead vs the
       // un-salted plan at sf~1 (A/B: 5.5-6.6 s both, vs 8.0 s at block=256
       // where fan=8 replication dominates)
-      val BLOCK = sys.props.get("graft.knn.block")
-        .orElse(sys.env.get("GRAFT_KNN_BLOCK")).getOrElse("1024").toLong
-      val CELL = sys.props.get("graft.knn.cell")
-        .orElse(sys.env.get("GRAFT_KNN_CELL")).getOrElse("1024").toLong
+      val BLOCK = sys.props.getOrElse("graft.knn.block", "1024").toLong
+      val CELL = sys.props.getOrElse("graft.knn.cell", "1024").toLong
       // 16-bit sign word (NaN-free fixture; Spark NaN>=0 is false where
       // DuckDB sorts NaN high — embeddings are finite by construction)
       val b16 = expr("aggregate(sequence(1, 16), 0L, (acc, j) -> " +

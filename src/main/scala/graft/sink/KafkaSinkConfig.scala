@@ -118,7 +118,7 @@ object KafkaSinkConfig {
     *  - `sasl.password.env` — the NAME of an environment variable holding
     *    the secret, the reference's discipline (config.zig:61-85:
     *    `password_env` — the password never lands in a config file, and
-    *    never in a bootstrap/pool-key string here), or
+    *    never in a bootstrap string here), or
     *  - `sasl.password` — the secret directly (test/dev convenience;
     *    cannot ride the string-plumbed bootstrap, see
     *    [[secureWireBootstrap]]).
@@ -165,7 +165,7 @@ object KafkaSinkConfig {
 
   /** Upgrade a `wire://` bootstrap to its secured form per validated
     * security options (no-op for PLAINTEXT) — the string form every
-    * existing plumbing point (env var, sink option, pool key) carries:
+    * existing plumbing point (env var, `kafkaBootstrap`) carries:
     * `wire+tls://` for SSL, SASL params appended for SASL_* (the string
     * carries the password's env NAME, never the secret — so the direct
     * `sasl.password` option cannot ride this path and fails loudly;

@@ -52,15 +52,12 @@ object KafkaSasl {
       "SASL username must not contain NUL (RFC 4616/5802)")
     require(!password.contains('\u0000'),
       "SASL password must not contain NUL (RFC 4616/5802)")
-    /** Identity for the producer-pool key: producers authenticated as
-      * different principals must never share a pooled connection. The
-      * PASSWORD is deliberately not part of the key (or any string form). */
-    def poolId: String = s"$mechanism:$username"
     /** Redacted — a case class's generated toString would print the live
       * secret into any log line, exception message or failed test
       * assertion that renders a Config or an endpoint holding one (r16
       * review finding). */
-    override def toString: String = s"KafkaSasl.Config($poolId,<redacted>)"
+    override def toString: String =
+      s"KafkaSasl.Config($mechanism:$username,<redacted>)"
   }
 
   /** RFC 4616 PLAIN initial response: NUL authzid NUL authcid NUL passwd

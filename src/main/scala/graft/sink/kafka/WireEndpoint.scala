@@ -4,9 +4,8 @@ import graft.source.postgres.PgTls
 
 /** Bootstrap-string form of the wire producer's endpoint, TLS and SASL
   * included, so both security axes flow through every existing string
-  * plumbing point (the `GRAFT_KAFKA_BOOTSTRAP` env, the frames sink's
-  * `bootstrap` option, the producer pool key) without threading new
-  * parameters through DSv2:
+  * plumbing point (the `GRAFT_KAFKA_BOOTSTRAP` env, `StreamingPipeline`'s
+  * `kafkaBootstrap`) without threading new parameters through:
   *
   *   - `wire://host:port` — plaintext (unchanged).
   *   - `wire+tls://host:port?ca=<path>[&verify=full|ca|require]` — TLS
@@ -35,25 +34,9 @@ import graft.source.postgres.PgTls
   */
 object WireEndpoint {
 
-  /** Pool key: the STRUCTURED security identity, never a string join.
-    * (tlsMode, caPath) and (mechanism, username) stay separate tuple
-    * components — a joined string over free-form values (a CA path
-    * containing '|', a username containing ':') could collide keys
-    * across distinct principals (r16 advice, medium). */
-  type PoolKey = (String, Int,
-    Option[(String, Option[String])], // TLS: (mode, rootCertPath)
-    Option[(String, String)]) // SASL: (mechanism, username) — never the password
-
   final case class Ep(host: String, port: Int,
       tls: Option[PgTls.SslConfig],
-      sasl: Option[KafkaSasl.Config] = None) {
-    /** Pool-key form: producers with different TLS trust or SASL
-      * principal identities must never share a pooled connection. The
-      * password is deliberately NOT part of the key. */
-    def poolKey: PoolKey = (host, port,
-      tls.map(t => (t.mode, t.rootCertPath)),
-      sasl.map(c => (c.mechanism, c.username)))
-  }
+      sasl: Option[KafkaSasl.Config] = None)
 
   def accepts(bootstrap: String): Boolean =
     bootstrap != null &&

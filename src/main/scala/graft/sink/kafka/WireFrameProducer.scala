@@ -4,10 +4,10 @@ import org.apache.spark.sql.{DataFrame, Row}
 
 /** [[graft.sink.FrameProducer]] over the in-repo wire client: each Spark
   * partition task opens its own connection (at scale, one producer socket
-  * per executor task — the same shape a stock client's per-task producer
-  * pool has), streams its rows through `send` (queue-full backpressure and
-  * size-triggered batching inside), and closes through `flush` — so the
-  * TASK only succeeds once every record it produced is acked by the broker.
+  * per executor task), streams its rows through `send` (queue-full
+  * backpressure and size-triggered batching inside), and closes through
+  * `flush` — so the TASK only succeeds once every record it produced is
+  * acked by the broker.
   * A delivery failure throws: Spark fails the epoch and restart-from-
   * checkpoint redelivers (at-least-once; consumers dedup on meta.lsn) —
   * the reference's fail-fast + slot-resend contract

@@ -202,8 +202,8 @@ object PgServerHarness {
       // full-page-image writes for every touched page, and the walsender
       // then has to read and decode a WAL stream whose VOLUME depends on
       // checkpoint timing — the r8→r9 live_drain_10x 2× swing's shape
-      // (drain wall-clock is ~90% walsender read-wait, measured by
-      // LiveDrainProfile, so WAL bytes ≈ drain time). No FPIs + no
+      // (drain wall-clock is ~90% walsender read-wait, so WAL bytes ≈
+      // drain time). No FPIs + no
       // mid-run checkpoints ⇒ same backlog, same WAL bytes, every run.
       // synchronous_commit stays ON deliberately: with fsync=off the
       // commit-time XLogFlush is a cheap buffer write, so the flushed

@@ -40,8 +40,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *
   * Delivery note: `foreachBatch` is at-least-once on restart — a replayed
   * batch would re-append its vectors. A deployment writes the corpus
-  * batch under a batchId-derived path (idempotent overwrite) exactly like
-  * [[graft.sink.frames.FramesSink]]'s per-epoch files; kept simple here
+  * batch under a batchId-derived path (idempotent overwrite); kept simple here
   * because the lifecycle decision, not sink idempotence, is what this
   * stream adds.
   */

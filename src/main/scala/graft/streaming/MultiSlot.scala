@@ -40,8 +40,7 @@ object MultiSlot {
       triggerMs: Long = 100L,
       maxEventsPerBatch: Int = PgWalSource.DefaultBatchSize,
       sinkParallelism: Int = 1,
-      sliceEvents: Int = 0,
-      sinkFormat: String = "parquet"): Seq[SlotHandle] = {
+      sliceEvents: Int = 0): Seq[SlotHandle] = {
     require(slots.nonEmpty, "no slots")
     require(slots.map(_.name).distinct.size == slots.size,
       s"duplicate slot names in ${slots.map(_.name)}")
@@ -54,8 +53,7 @@ object MultiSlot {
         outDir = s"$baseOutDir/slot=${s.name}",
         kafkaBootstrap = kafkaBootstrap, triggerMs = triggerMs,
         maxEventsPerBatch = maxEventsPerBatch,
-        sinkParallelism = sinkParallelism, sliceEvents = sliceEvents,
-        sinkFormat = sinkFormat))
+        sinkParallelism = sinkParallelism, sliceEvents = sliceEvents))
     }
   }
 

@@ -15,7 +15,8 @@ import org.apache.spark.sql.Row
   * (src/processor/processor.zig:347-406):
   *  - micro-batch cadence  ≈ receiveBatchWithWaitTime (trigger interval +
   *    source-side admission control)
-  *  - foreachBatch fan-out ≈ matchStreams + per-stream produce
+  *  - routing fan-out + foreachBatch produce ≈ matchStreams +
+  *    per-stream produce
   *  - checkpointing + source.commit ≈ flushCommitWorker's
   *    flush-then-confirm-LSN (Spark invokes commit only after the sink
   *    completes the epoch — the same at-least-once contract)
@@ -38,25 +39,22 @@ object StreamingPipeline {
       .load()
 
   /** Routed, serialized, Kafka-shaped frame (topic, key, value) from the
-    * envelope stream. Serialize-once happens upstream of the broadcast
-    * fan-out join; the key is extracted from the JSON payload by the
+    * envelope stream. Serialize-once happens upstream of the routing
+    * fan-out; the key is extracted from the JSON payload by the
     * stream's routing_key. */
   def kafkaFrame(events: DataFrame, streams: Seq[StreamDef]): DataFrame = {
-    val spark = events.sparkSession
     // one envelope formatter for the whole engine (JsonEnvelope owns the
     // field order and escaping rules; the stream's `source` is the constant
-    // the envelope hardcodes)
-    val serialized = events.withColumn("value",
-      graft.serialization.JsonEnvelope.envelopeCol(
-        op = col("op"), dataJson = col("data"), resource = col("resource"),
-        timestamp = col("commit_ts"), lsn = col("lsn")))
-    // GRAFT_ROUTE_FORM=join selects the broadcast-join routing form for an
-    // A/B (RoutingInlineSpec pins row-identity between the two); inline is
-    // the default — zero exchanges, no per-batch broadcast build
-    val routed =
-      if (sys.env.getOrElse("GRAFT_ROUTE_FORM", "inline") == "join")
-        Routing.route(serialized, Routing.streamsDF(spark, streams))
-      else Routing.routeInline(serialized, streams)
+    // the envelope hardcodes). Routing is the inline form — zero exchanges,
+    // no per-batch broadcast build; the broadcast-join form
+    // (Routing.route) stays as the reference RoutingInlineSpec pins
+    // row-identity against.
+    val routed = Routing.routeInline(
+      events.withColumn("value",
+        graft.serialization.JsonEnvelope.envelopeCol(
+          op = col("op"), dataJson = col("data"), resource = col("resource"),
+          timestamp = col("commit_ts"), lsn = col("lsn"))),
+      streams)
     // Routing-key extraction from the JSON row payload. The key set is
     // closed (it comes from config), so this folds into a CASE over constant
     // JSON paths — codegen-friendly, unlike a dynamic path. A missing key
@@ -95,22 +93,39 @@ object StreamingPipeline {
       (max(col("commit_ts")).as("max_commit_ts") +: tallies): _*)
   }
 
-  /** Start the job with a file sink per topic (Kafka stand-in when no broker
-    * is available) or the real Kafka sink when `kafkaBootstrap` is set.
+  /** Start the job. Frames reach one of two outputs:
+    *  - a broker, through a [[graft.sink.FrameProducer]] called from
+    *    `foreachBatch`: the explicit `producer` if given (fail-injection
+    *    tests, custom transports), else one built from `kafkaBootstrap` —
+    *    `wire://` / `wire+tls://` selects the in-repo wire producer
+    *    ([[graft.sink.kafka.WireFrameProducer]]), any other bootstrap the
+    *    stock Kafka sink. This is the path `graft.Main` ships.
+    *  - no broker: the parquet stand-in under `outDir`.
     *
     * Per-batch metrics (event count, lag, per-(stream,op) tallies) all ride
     * the `observe()` aggregates — consume them by attaching a
     * [[graft.metrics.GraftQueryListener]] built with the same `streams`.
     *
-    * Sink shape: the stand-in path writes through Spark's native streaming
-    * parquet sink — no foreachBatch, so each micro-batch reuses the
-    * incremental plan instead of re-deriving a batch write plan (~0.3 s per
-    * batch back). The Kafka path keeps foreachBatch (no kafka connector in
-    * this build's jars); there, hash-partitioning by Kafka key + sorting by
-    * LSN within partitions restores the per-key delivery order CDC consumers
+    * Broker delivery: hash-partitioning by Kafka key + sorting by LSN
+    * within partitions restores the per-key delivery order CDC consumers
     * rely on while spreading produce over `sinkParallelism` tasks. Delivery
     * is at-least-once on batch retry — the reference's contract; consumers
-    * dedup on meta.lsn. */
+    * dedup on meta.lsn.
+    *
+    * The stand-in writes through Spark's native streaming parquet sink —
+    * no foreachBatch, so each micro-batch reuses the incremental plan
+    * instead of re-deriving a batch write plan (~0.3 s per batch back),
+    * and its `_spark_metadata` log makes the output exactly-once per
+    * (topic, lsn) across crash/restart.
+    *
+    * Async progress tracking (offset- and commit-log writes off the
+    * per-batch critical path) is one writer option away on the broker
+    * path: Spark 4.1.2's `AsyncProgressTrackingMicroBatchExecution`
+    * allowlists only its own sinks, but skips that check whenever
+    * `ASYNC_PROGRESS_TRACKING_OVERRIDE_SINK_SUPPORT_CHECK` is set, which
+    * admits `foreachBatch` (Bench's `ann_serve` runs that way). It only
+    * widens the post-crash redelivery window, which consumers already
+    * absorb by deduping on meta.lsn. */
   def start(spark: SparkSession, walDir: String, streams: Seq[StreamDef],
       checkpointDir: String, outDir: String,
       kafkaBootstrap: Option[String] = None,
@@ -118,32 +133,12 @@ object StreamingPipeline {
       maxEventsPerBatch: Int = PgWalSource.DefaultBatchSize,
       sinkParallelism: Int = 1,
       sliceEvents: Int = 0,
-      producer: Option[graft.sink.FrameProducer] = None,
-      sinkFormat: String = "parquet",
-      asyncProgress: Boolean = false,
-      failCommitsToken: Option[String] = None): StreamingQuery = {
-    require(!asyncProgress || sinkFormat == "frames",
-      "async progress tracking needs the DSv2 frames sink (ForeachBatchSink " +
-        "and the v1 file sink are rejected by Spark's async validation)")
+      producer: Option[graft.sink.FrameProducer] = None): StreamingQuery = {
     val frame = observed(
       kafkaFrame(walStream(spark, walDir, maxEventsPerBatch, sliceEvents), streams),
       streams)
-
-    // delivery seam: an explicit producer wins (fail-injection tests, custom
-    // transports); with sinkFormat="frames" a wire:// bootstrap goes through
-    // the DSv2 sink (per-task producer sockets, flush on task commit);
-    // otherwise a wire:// bootstrap selects the in-repo foreachBatch wire
-    // producer and any other bootstrap the stock Kafka sink
-    // WireEndpoint.accepts, not a wire:// prefix check: a wire+tls://
-    // bootstrap must route through the SAME DSv2 path (the pool and the
-    // per-task producers are TLS-capable) — a prefix check silently
-    // demoted TLS runs to the foreachBatch producer, which asyncProgress
-    // then rejects at query start (r15 review finding)
-    val dsv2Wire = producer.isEmpty && sinkFormat == "frames" &&
-      kafkaBootstrap.exists(graft.sink.kafka.WireEndpoint.accepts)
     val frameProducer: Option[graft.sink.FrameProducer] =
-      if (dsv2Wire) None
-      else producer.orElse(kafkaBootstrap.map(b =>
+      producer.orElse(kafkaBootstrap.map(b =>
         graft.sink.kafka.WireFrameProducer.fromBootstrap(b)
           .getOrElse(new graft.sink.KafkaFrameProducer(b))))
 
@@ -164,48 +159,16 @@ object StreamingPipeline {
           // consumers dedup on meta.lsn)
           p.produce(shaped)
         }
-      case None if sinkFormat == "frames" =>
-        // DSv2 frames sink ([[graft.sink.frames.FramesSink]]): broker-style
-        // framed append (file mode) or per-task wire producers (wire mode).
-        // Streaming plans cannot sortWithinPartitions, so rows deliver in
-        // arrival order per task — exact for sliceEvents=0 (one ordered
-        // partition, a replication slot's shape); sliced decode feeding a
-        // real broker keeps the foreachBatch path above, which CAN sort.
-        val shaped =
-          if (sinkParallelism > 1)
-            frame.repartition(sinkParallelism, col("key"))
-          else frame
-        val w = shaped.writeStream
-          .format(classOf[graft.sink.frames.FramesSink].getName)
-        val w2 = if (dsv2Wire) w.option("bootstrap", kafkaBootstrap.get)
-          else w.option("path", outDir)
-        failCommitsToken.fold(w2)(t => w2.option("failCommitsToken", t))
       case None =>
-        // Kafka stand-in (v1 file sink): the native streaming parquet sink,
         // `topic` as a column — partitionBy would force a per-batch sort on
         // the partition column, and compression would bill the stand-in for
         // work a Kafka producer doesn't do (measured: snappy 52k ev/s,
-        // none 77k). Kept as the conservative default; the frames sink above
-        // is the Kafka-faithful stand-in and the async-capable path.
+        // none 77k)
         frame.writeStream.format("parquet")
           .option("path", outDir)
           .option("compression", "none")
     }
-    // The ~220 ms per-batch floor is dominated by the synchronous offset-log
-    // + commit-log writes, not the data path. Async progress tracking moves
-    // both off the critical path; Spark 4.1 name-allowlists only its own
-    // at-least-once sinks (Kafka/noop/memory/console) and rejects
-    // ForeachBatchSink outright, so the DSv2 frames sink opts in through
-    // Spark's documented override option — sound here because the engine's
-    // contract is already at-least-once with consumer dedup on meta.lsn
-    // (async only widens the post-crash redelivery window).
-    val withAsync =
-      if (asyncProgress)
-        writer.option(graft.sink.frames.FramesSink.AsyncEnabled, "true")
-          .option(graft.sink.frames.FramesSink.AsyncOverrideSinkCheck, "true")
-          .option(graft.sink.frames.FramesSink.AsyncIntervalMs, "1000")
-      else writer
-    withAsync
+    writer
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.ProcessingTime(triggerMs))
       .start()

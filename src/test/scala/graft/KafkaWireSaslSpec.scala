@@ -134,7 +134,6 @@ class KafkaWireSaslSpec extends AnyFunSuite {
     assert(!c.toString.contains("s3cret"), c.toString)
     val ep = WireEndpoint.Ep("h", 1, None, Some(c))
     assert(!ep.toString.contains("s3cret"), ep.toString)
-    assert(!ep.poolKey.toString.contains("s3cret"))
   }
 
   // ---- config routing (KafkaSinkConfig.wireSasl / secureWireBootstrap) ----
@@ -190,11 +189,7 @@ class KafkaWireSaslSpec extends AnyFunSuite {
     val ep = WireEndpoint.parse(boot, fakeEnv)
     assert(ep.sasl.contains(KafkaSasl.Config("SCRAM-SHA-256", "u=2,",
       "oddpw")))
-    // the pool key carries the STRUCTURED principal identity — never a
-    // string join free-form values could collide (r16 advice)
-    assert(ep.poolKey._4.contains(("SCRAM-SHA-256", "u=2,")))
-    assert(!ep.poolKey.toString.contains("oddpw"),
-      "the secret leaked into the pool key")
+    assert(!ep.toString.contains("oddpw"), "the secret leaked into the endpoint")
     // the direct-password form cannot ride the string path
     intercept[IllegalArgumentException] {
       KafkaSinkConfig.secureWireBootstrap("wire://h:9092", Map(
@@ -209,32 +204,6 @@ class KafkaWireSaslSpec extends AnyFunSuite {
         "security.protocol" -> "SASL_PLAINTEXT",
         "sasl.mechanism" -> "PLAIN", "sasl.username" -> "svc",
         "sasl.password.env" -> "GRAFT_TEST_SASL_PW"), fakeEnv)
-    }
-  }
-
-  test("pool keys cannot collide across principals via crafted values") {
-    // ca path 'p|PLAIN:u|nosasl' with no SASL vs ca path 'p' with SASL
-    // user 'u|nosasl' — the old '|'-joined string key collided these
-    // ('|' and ':' are legal in Linux filenames; SslConfig requires the
-    // CA file to exist, so create both)
-    val dir = java.nio.file.Files.createTempDirectory("graft-poolkey")
-    val pa = dir.resolve("p|PLAIN:u|nosasl"); val pb = dir.resolve("p")
-    java.nio.file.Files.createFile(pa); java.nio.file.Files.createFile(pb)
-    try {
-      val a = WireEndpoint.Ep("h", 1,
-        Some(PgTls.SslConfig("verify-full", Some(pa.toString))), None)
-      val b = WireEndpoint.Ep("h", 1,
-        Some(PgTls.SslConfig("verify-full", Some(pb.toString))),
-        Some(KafkaSasl.Config("PLAIN", "u|nosasl", "pw")))
-      // align the crafted suffix exactly as the old string join saw it:
-      // a's ca path == b's ca path + "|PLAIN:" + b's user + "|nosasl"
-      assert(pa.toString == pb.toString + "|PLAIN:u|nosasl")
-      assert(a.poolKey != b.poolKey,
-        "distinct security identities must never share a pool key")
-    } finally {
-      java.nio.file.Files.deleteIfExists(pa)
-      java.nio.file.Files.deleteIfExists(pb)
-      java.nio.file.Files.deleteIfExists(dir)
     }
   }
 

@@ -128,35 +128,37 @@ class KafkaWireTlsSpec extends AnyFunSuite {
       "wire://b:2")
   }
 
-  test("the frames sink's wire mode carries TLS through the DSv2 path") {
-    // the full delivery path — StreamingPipeline's sink option string →
-    // FramesSink parse → pooled per-task producers — must preserve the
-    // TLS identity (the pool keys on it, so a verify-full task can never
-    // be handed a plaintext socket)
+  test("fromBootstrap carries TLS through the foreachBatch wire path") {
+    // the bootstrap string → WireEndpoint parse → WireFrameProducer →
+    // per-task WireProducer chain must keep the TLS identity across task
+    // serialization: the broker speaks TLS only, so frames landing prove
+    // no task fell back to a plaintext socket, and a CA the broker's
+    // chain does not satisfy must fail the produce, never trust-all
     val creds = TlsTestCerts.makeServer()
-    val ep = WireEndpoint.parse(
-      s"wire+tls://localhost:1234?ca=${creds.certPath}")
-    assert(ep.poolKey != WireEndpoint.Ep("localhost", 1234, None).poolKey,
-      "TLS and plaintext producers must not share a pool slot")
     val broker = tlsBroker(creds)
     try {
-      val p = graft.sink.kafka.WireProducerPool.borrow(
-        WireEndpoint.parse(s"wire+tls://localhost:${broker.port}?ca=${creds.certPath}"))
-      try {
-        p.send("t", "k".getBytes, "v".getBytes)
-        p.flush()
-        assert(broker.receivedSeq.nonEmpty)
-      } finally p.abortClose()
+      val spark = SparkTestBase.spark
+      import spark.implicits._
+      val frames = (1 to 12).map(i => ("t", s"k$i", s"v$i"))
+        .toDF("topic", "key", "value").repartition(3)
+      graft.sink.kafka.WireFrameProducer.fromBootstrap(
+        s"wire+tls://localhost:${broker.port}?ca=${creds.certPath}")
+        .get.produce(frames)
+      assert(broker.receivedSeq.map(_._4).toSet == (1 to 12).map("v" + _).toSet)
+      val otherCa = TlsTestCerts.makeServer().certPath
+      val untrusted = graft.sink.kafka.WireFrameProducer.fromBootstrap(
+        s"wire+tls://localhost:${broker.port}?ca=$otherCa").get
+      intercept[Exception](untrusted.produce(frames))
+      assert(broker.receivedSeq.size == 12,
+        "a producer with an untrusted CA delivered frames")
     } finally broker.close()
   }
 
-  test("wire+tls routes through the DSv2 frames sink (async-capable end to end)") {
-    // r15 review finding: the routing gate used a wire:// PREFIX check, so
-    // a wire+tls:// bootstrap silently fell back to the foreachBatch
-    // producer — losing the pooled per-task DSv2 path the TLS work
-    // targets. Pin the routing by its observable: the running query's
-    // sink is the FramesSink table, not ForeachBatchSink, async progress
-    // is accepted, and delivery still lands on the TLS broker.
+  test("wire+tls bootstrap delivers end to end through StreamingPipeline.start") {
+    // the shipped delivery path — the bootstrap string → WireEndpoint parse
+    // → WireFrameProducer's per-task TLS producers under foreachBatch —
+    // must keep the TLS identity and deliver the same frames the parquet
+    // stand-in writes for the same backlog
     import java.nio.file.{Files, Paths}
     import graft.operators.Routing
     import graft.source.wal.{WalFixture, WalLog}
@@ -174,22 +176,22 @@ class KafkaWireTlsSpec extends AnyFunSuite {
         Seq("click", "purchase", "signup", "view")(i.toInt % 4), i * 0.5, "{}"))
       WalLog.write(Paths.get(walDir, "00000000.wal"),
         events.iterator.flatMap(e => WalFixture.frames(e, seen)))
-      val out = Files.createTempDirectory("graft-tlsout").toString
-      val ckpt = Files.createTempDirectory("graft-tlsck").toString
-      val q = StreamingPipeline.start(spark, walDir, Routing.fixtureStreams,
-        ckpt, out,
-        kafkaBootstrap = Some(
-          s"wire+tls://localhost:${broker.port}?ca=${creds.certPath}"),
-        triggerMs = 25L, sinkFormat = "frames", asyncProgress = true)
-      try q.processAllAvailable() finally q.stop()
-      // the DSv2 table renders as graft.sink.frames.FramesTable; the
-      // foreachBatch fallback renders as ForeachBatchSink
-      assert(Option(q.lastProgress).exists(
-        _.sink.description.contains("graft.sink.frames")),
-        "wire+tls did not route through the DSv2 frames sink: " +
-          Option(q.lastProgress).map(_.sink.description))
-      assert(broker.receivedSeq.nonEmpty,
-        "no frames delivered over the TLS wire")
+      def drain(bootstrap: Option[String]): String = {
+        val out = Files.createTempDirectory("graft-tlsout").toString
+        val ckpt = Files.createTempDirectory("graft-tlsck").toString
+        val q = StreamingPipeline.start(spark, walDir, Routing.fixtureStreams,
+          ckpt, out, kafkaBootstrap = bootstrap, triggerMs = 25L)
+        try q.processAllAvailable() finally q.stop()
+        out
+      }
+      drain(Some(s"wire+tls://localhost:${broker.port}?ca=${creds.certPath}"))
+      import spark.implicits._
+      val expected = spark.read.parquet(drain(None))
+        .select("topic", "value").as[(String, String)].collect().toSeq.sorted
+      val onBroker = broker.receivedSeq.map(r => (r._1, r._4)).sorted
+      assert(onBroker.nonEmpty, "no frames delivered over the TLS wire")
+      assert(onBroker == expected,
+        s"TLS broker holds ${onBroker.size} frames, the stand-in ${expected.size}")
     } finally broker.close()
   }
 }

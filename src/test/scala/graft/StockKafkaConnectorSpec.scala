@@ -34,7 +34,7 @@ class StockKafkaConnectorSpec extends AnyFunSuite {
         "GRAFT_KAFKA_BOOTSTRAP=host:port to run the stock-connector smoke")
     val spark = SparkTestBase.spark
     import spark.implicits._
-    // the same (key, value, topic) shape FramesSink's kafkaFrame rows use;
+    // the same (key, value, topic) shape StreamingPipeline.kafkaFrame rows use;
     // a successful batch write through the stock DSv2 provider closes the
     // last missing inventory line (reference src/config/config.zig sinks)
     Seq(("k1", """{"op":"c","data":{"id":1}}"""),
