@@ -113,26 +113,32 @@ object Main {
     // before the marker drops, then CopyBoth streaming into the WAL dir the
     // source reads (reference: src/main.zig:179-238 wiring). Without the
     // block, walDir is expected to be fed externally (tests, replays).
-    // ONE producer decision for both delivery phases: snapshot READ events
-    // and streamed changes must reach the SAME destination (a Kafka consumer
+    // ONE producer for both delivery phases: snapshot READ events and
+    // streamed changes must reach the SAME destination (a Kafka consumer
     // must see the initial state before the first I/U/D)
-    // wire://host:port selects the in-repo wire producer (no kafka jars)
     val producer: Option[graft.sink.FrameProducer] =
-      sys.env.get("GRAFT_KAFKA_BOOTSTRAP").map(b =>
-        graft.sink.kafka.WireFrameProducer.fromBootstrap(b)
-          .getOrElse(new graft.sink.KafkaFrameProducer(b)))
+      sys.env.get("GRAFT_KAFKA_BOOTSTRAP").map(graft.sink.FrameProducer.forBootstrap)
 
     val spooler = config.postgres.map { pg =>
       val ep = graft.source.postgres.SocketCopyBothChannel.parseUri(
         pg.connectionUri.get) // presence enforced at startup above
-      // chunked delivery: bounded driver memory for any table size; the
-      // at-scale alternative is the partitioned JdbcSnapshot batch job
-      // under an EXPORT_SNAPSHOT name — same events, many scanners
+      // chunked delivery: bounded driver memory for any table size
       val delivery = new graft.streaming.SnapshotDelivery(
         spark, config.streams, producer, outDir)
-      def bootstrapOnce() = {
-        val session = graft.source.postgres.PgSession.connect(ep,
-          queryTimeoutMs = pg.queryTimeoutMs)
+      def connect() = graft.source.postgres.PgSession.connect(ep,
+        queryTimeoutMs = pg.queryTimeoutMs)
+      // V1 pre-flight on the bootstrap session, before any publication,
+      // marker or slot exists: a misconfigured table (e.g. a delete stream
+      // without REPLICA IDENTITY FULL, whose DELETE old rows would lose
+      // every non-key column) fails startup listing every failing check
+      // with its fix. Once, outside the retry: a failed check fails again.
+      val first = connect()
+      try graft.source.postgres.Preflight.requirePass(first, config.streams)
+      catch { case e: Throwable =>
+        try first.close() catch { case _: Throwable => () }
+        throw e
+      }
+      def bootstrapOnce(session: graft.source.postgres.PgSession) =
         try {
           val boot = graft.source.postgres.WireBootstrap.bootstrap(
             session, pg.slotName, pg.publicationName, config.streams,
@@ -144,7 +150,6 @@ object Main {
           try session.close() catch { case _: Throwable => () }
           throw e
         }
-      }
       // The bootstrap state machine is crash-safe and idempotent by
       // construction (marker-before-slot, redo-on-orphan, per-resource
       // ledger — SnapshotBootstrap), so ONE retry on a FRESH session is
@@ -154,12 +159,12 @@ object Main {
       // would succeed. At-least-once holds — a retry can redeliver
       // snapshot READs; consumers dedup on meta.lsn.
       val (session, boot) =
-        try bootstrapOnce()
+        try bootstrapOnce(first)
         catch { case e: Throwable =>
           System.err.println(s"[graft] bootstrap attempt 1 failed ($e); " +
             "dumping server activity, then retrying once on a fresh session")
           diagnoseServer(ep)
-          bootstrapOnce()
+          bootstrapOnce(connect())
         }
       println(s"[graft] bootstrap: ${boot.outcome} — " +
         s"${delivery.deliveredCount} snapshot events delivered; streaming " +

@@ -165,27 +165,3 @@ final class GraftQueryListener(metrics: GraftMetrics,
     event.exception.foreach(metrics.lastError.set)
   }
 }
-
-/** V1 — pre-flight catalog checks, as the exact SQL the driver runs over
-  * JDBC before starting a query (reference: src/source/postgres/validator.zig:76-179).
-  * Kept as data so deployments without a live Postgres can still unit-test
-  * the contract. */
-object PreflightChecks {
-  /** Resource/column names are interpolated into string LITERALS below —
-    * double any quote so a hostile config value can't break out of the
-    * literal (the config layer also restricts these, belt + braces). */
-  private def lit(s: String): String = s.replace("'", "''")
-  /** server_version_num ≥ 120000 (Postgres 12+). */
-  val serverVersion = "SELECT current_setting('server_version_num')::int >= 120000"
-  val walLevel = "SELECT current_setting('wal_level') = 'logical'"
-  def tableExists(resource: String) =
-    s"SELECT to_regclass('${lit(resource)}') IS NOT NULL"
-  def columnExists(resource: String, column: String) =
-    s"""SELECT EXISTS (SELECT 1 FROM pg_attribute
-       | WHERE attrelid = to_regclass('${lit(resource)}')
-       |   AND attname = '${lit(column)}' AND NOT attisdropped)""".stripMargin
-  /** REPLICA IDENTITY FULL required for delete-tracking streams
-    * (validator.zig:151-179). */
-  def replicaIdentityFull(resource: String) =
-    s"SELECT relreplident = 'f' FROM pg_class WHERE oid = to_regclass('${lit(resource)}')"
-}

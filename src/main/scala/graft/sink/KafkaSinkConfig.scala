@@ -226,6 +226,15 @@ trait FrameProducer {
   def produce(shaped: org.apache.spark.sql.DataFrame): Unit
 }
 
+object FrameProducer {
+  /** The one bootstrap → producer decision: `wire://` / `wire+tls://`
+    * selects the in-repo wire producer, any other bootstrap the stock Kafka
+    * sink. */
+  def forBootstrap(bootstrap: String): FrameProducer =
+    graft.sink.kafka.WireFrameProducer.fromBootstrap(bootstrap)
+      .getOrElse(new KafkaFrameProducer(bootstrap))
+}
+
 /** Real-broker producer: Spark's Kafka batch sink with the reference's
   * delivery options (idempotence, acks=all) + validated security overlay. */
 final class KafkaFrameProducer(bootstrap: String,

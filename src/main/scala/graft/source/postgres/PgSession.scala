@@ -10,10 +10,11 @@ import java.nio.charset.StandardCharsets.UTF_8
   * RowDescription / DataRow / CommandComplete / ReadyForQuery) and can hand
   * the socket over to CopyBoth streaming via [[startReplication]].
   *
-  * This is the piece that closes the cold-start gap: `CREATE PUBLICATION`,
-  * `CREATE_REPLICATION_SLOT … LOGICAL pgoutput` (whose RESULT ROW carries
-  * `consistent_point` + `snapshot_name`), and the snapshot-phase cursor scan
-  * all run as simple queries on this session before streaming begins
+  * It is graft's only Postgres client: the [[Preflight]] catalog checks,
+  * `CREATE PUBLICATION`, `CREATE_REPLICATION_SLOT … LOGICAL pgoutput`
+  * (whose RESULT ROW carries `consistent_point`), and the snapshot-phase
+  * cursor scan all run as simple queries on this session before streaming
+  * begins
   * (reference: src/source/postgres/replication_protocol.zig:216-313, slot
   * state machine source.zig:178-197). PostgreSQL's walsender accepts plain
   * SQL alongside replication commands when started with

@@ -280,21 +280,9 @@ object Scram {
 /** SCRAM-SHA-256 surface (RFC 5802/7677, the PostgreSQL default auth since
   * v14's `password_encryption = scram-sha-256`). No channel binding
   * (`n,,` gs2 header — the plain `SCRAM-SHA-256` mechanism, not `-PLUS`).
-  * Thin instantiation of [[Scram]]'s hash-parameterized core; crypto
-  * primitives re-exposed so the test-side verifier can share them. */
+  * Thin instantiation of [[Scram]]'s hash-parameterized core. */
 object ScramSha256 {
   val Mechanism = "SCRAM-SHA-256"
-
-  def h(data: Array[Byte]): Array[Byte] = Scram.h(Scram.Sha256, data)
-
-  def hmac(key: Array[Byte], data: Array[Byte]): Array[Byte] =
-    Scram.hmac(Scram.Sha256, key, data)
-
-  /** Hi(password, salt, i) = PBKDF2-HMAC-SHA256, 32-byte output. */
-  def hi(password: String, salt: Array[Byte], iterations: Int): Array[Byte] =
-    Scram.hi(Scram.Sha256, password, salt, iterations)
-
-  def xor(a: Array[Byte], b: Array[Byte]): Array[Byte] = Scram.xor(a, b)
 
   /** One client exchange (empty n= — the PG convention). */
   final class Client(password: String,
@@ -305,11 +293,13 @@ object ScramSha256 {
       }) extends Scram.Client(Scram.Sha256, password, "", nonce)
 }
 
-/** A [[CopyBothChannel]] over a real TCP socket: performs the startup/auth
-  * handshake and `START_REPLICATION` (→ CopyBothResponse), then frames
-  * replication messages in CopyData both ways. This is the piece that turns
-  * the fake-tested CopyBoth loop ([[ReplicationWire]]/[[ReplicationSpooler]])
-  * into an engine a user points at a real `postgres://` URL
+/** A [[CopyBothChannel]] over a real TCP socket: the [[PgSession]] that
+  * authenticated, checked and bootstrapped hands its socket over once
+  * `START_REPLICATION` answers CopyBothResponse
+  * ([[PgSession.startReplication]]); this frames replication messages in
+  * CopyData both ways. This is the piece that turns the fake-tested
+  * CopyBoth loop ([[ReplicationWire]]/[[ReplicationSpooler]]) into an
+  * engine a user points at a real `postgres://` URL
   * (reference session setup: src/source/postgres/replication_protocol.zig:114-374).
   *
   * `read()` returns the next CopyData payload, or null when nothing arrived
@@ -415,20 +405,4 @@ object SocketCopyBothChannel {
     Endpoint(u.getHost, if (u.getPort > 0) u.getPort else 5432, user, db,
       pass, ssl)
   }
-
-  /** Open a replication-mode session and enter CopyBoth streaming.
-    *
-    * Handshake: StartupMessage(replication=database) → auth (trust /
-    * cleartext / MD5 / SCRAM-SHA-256) → ReadyForQuery → Query(
-    * START_REPLICATION …) → CopyBothResponse. Any ErrorResponse aborts with
-    * the server's message — bad credentials or a missing slot must fail the
-    * session loudly, never downgrade. The handshake lives in [[PgSession]]
-    * (which also runs the bootstrap's simple queries); this entry is the
-    * one-shot "slot already exists, just stream" path. */
-  def connect(ep: Endpoint, slot: String, publication: String,
-      startLsn: String, readTimeoutMs: Int = 500,
-      connectTimeoutMs: Int = 15000,
-      midMessageTimeoutMs: Int = 30000): SocketCopyBothChannel =
-    PgSession.connect(ep, connectTimeoutMs)
-      .startReplication(slot, publication, startLsn, readTimeoutMs, midMessageTimeoutMs)
 }

@@ -1,20 +1,20 @@
 package graft.source.postgres
 
-/** S2 — replication session management as driver-side SQL/command builders.
+/** S2 — replication session management as command builders.
   *
   * The reference opens a replication-mode connection and issues these
   * commands directly (reference: src/source/postgres/replication_protocol.zig:114-374,
-  * slot state machine source.zig:178-197). In the Spark build they run over a
-  * plain JDBC connection during the source's bootstrap (driver side), so the
-  * engine keeps them as pure command text + a tiny state machine — testable
-  * without a server, verbatim against one.
+  * slot state machine source.zig:178-197). graft does the same: every
+  * command here runs as a simple query on the one [[PgSession]] that
+  * bootstraps and then streams ([[WireBootstrap]]). Keeping them as pure
+  * command text makes them testable without a server, verbatim against one.
   */
 object Replication {
 
   /** Identifiers are interpolated into command text — restrict them to the
     * unquoted-identifier charset so a mixed-case/reserved/quoted name cannot
     * silently fold to a different object or inject into the command. */
-  private[postgres] def ident(name: String): String = {
+  private def ident(name: String): String = {
     require(name.matches("[a-z_][a-z0-9_]*(\\.[a-z_][a-z0-9_]*)?"),
       s"invalid identifier: '$name' (lowercase unquoted identifiers only)")
     name
@@ -76,22 +76,17 @@ object Replication {
     * captured together: every commit visible to the scan has lsn < boundary. */
   val currentWalLsn = "SELECT pg_current_wal_lsn() AS lsn"
 
-  /** How slot creation exposes its consistent snapshot (public replication
-    * grammar): EXPORT returns `snapshot_name` for OTHER sessions to adopt
-    * (the parallel multi-connection snapshot path — [[JdbcSnapshot]]);
-    * USE pins THIS session's open transaction to the snapshot, so the
-    * single-session bootstrap can scan tables and then stream with no second
-    * connection; NOTHING skips the snapshot (streaming-only streams). */
+  /** How slot creation treats its consistent snapshot (public replication
+    * grammar): USE pins THIS session's open transaction to the snapshot, so
+    * the bootstrap scans tables and then streams on one connection; NOTHING
+    * skips the snapshot (streaming-only streams). */
   sealed trait SnapshotMode { def clause: String }
-  case object ExportSnapshot extends SnapshotMode { val clause = "EXPORT_SNAPSHOT" }
   case object UseSnapshot extends SnapshotMode { val clause = "USE_SNAPSHOT" }
-  case object NoExportSnapshot extends SnapshotMode { val clause = "NOEXPORT_SNAPSHOT" }
+  case object NoSnapshot extends SnapshotMode { val clause = "NOEXPORT_SNAPSHOT" }
 
   /** Slot creation on a replication connection; the result row carries
-    * `consistent_point` (the stream start LSN) and `snapshot_name` (the
-    * exported snapshot the initial table scan must run under — only valid
-    * while this session stays open, snapshot.zig:31-36). */
-  def createSlot(slot: String, mode: SnapshotMode = ExportSnapshot): String =
+    * `consistent_point`, the stream start LSN. */
+  def createSlot(slot: String, mode: SnapshotMode): String =
     s"CREATE_REPLICATION_SLOT ${ident(slot)} LOGICAL pgoutput ${mode.clause}"
 
   def dropSlot(slot: String): String =
@@ -105,16 +100,9 @@ object Replication {
     s"START_REPLICATION SLOT ${ident(slot)} LOGICAL $startLsn " +
       s"""(proto_version '1', publication_names '${ident(publication)}')"""
 
-  /** Snapshot session setup: the initial scan must see exactly the slot's
-    * consistent point (snapshot.zig:75-100). */
-  def snapshotSessionSql(snapshotName: String): Seq[String] = Seq(
-    "BEGIN ISOLATION LEVEL REPEATABLE READ",
-    s"SET TRANSACTION SNAPSHOT '$snapshotName'")
-
-  /** Cursor-batched table scan for the snapshot phase (snapshot.zig:144-152).
-    * At cluster scale the equivalent is a partitioned `spark.read.jdbc` with
-    * predicate ranges on the PK — same transaction-snapshot pin per
-    * partition connection. */
+  /** Cursor-batched table scan for the snapshot phase (snapshot.zig:144-152),
+    * run inside the snapshot transaction: the one `USE_SNAPSHOT` pinned, or
+    * a delta snapshot's REPEATABLE READ. */
   def declareCursor(cursor: String, resource: String): String =
     s"DECLARE ${ident(cursor)} CURSOR FOR SELECT * FROM ${ident(resource)}"
 

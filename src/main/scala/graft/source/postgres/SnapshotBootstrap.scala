@@ -11,8 +11,9 @@ import graft.config.StreamDef
   *
   *  1. A MARKER publication is created BEFORE the slot — a durable
   *     "snapshot in progress" flag.
-  *  2. Slot creation exports a snapshot; rows read under it become READ
-  *     events stamped with the slot's consistent point.
+  *  2. Slot creation pins the bootstrap session's transaction to the
+  *     slot's snapshot; rows read under it become READ events stamped with
+  *     the slot's consistent point.
   *  3. The marker is dropped only after the snapshot fully flushes — so
   *     marker-present-at-startup means an interrupted snapshot: drop the
   *     orphaned slot and redo from a fresh consistent point.
@@ -41,18 +42,20 @@ import graft.config.StreamDef
   */
 object SnapshotBootstrap {
 
-  /** Side-effect boundary (wire/JDBC in production, fake in tests). */
+  /** Side-effect boundary (the bootstrap's [[PgSession]] in production, a
+    * fake in tests). */
   trait Catalog {
     def markerExists(marker: String): Boolean
     def createMarker(marker: String): Unit
     def dropMarker(marker: String): Unit
     def slotExists(slot: String): Boolean
-    /** Returns (consistentPoint, exportedSnapshotName). */
-    def createSlot(slot: String): (Long, String)
+    /** Create the slot and return its consistent point; when a snapshot
+      * phase follows, the session is left pinned to the slot's snapshot. */
+    def createSlot(slot: String): Long
     def dropSlot(slot: String): Unit
     /** Emit all current rows of `resource` as READ events stamped with
-      * `boundaryLsn`, under the exported snapshot. */
-    def snapshotResource(resource: String, snapshotName: String, boundaryLsn: Long): Unit
+      * `boundaryLsn`, under the pinned snapshot. */
+    def snapshotResource(resource: String, boundaryLsn: Long): Unit
     /** Delivery barrier: returns only when every emitted READ event is
       * durably in the sink (producer flush — processor.zig:336-343). */
     def flushSink(): Unit
@@ -105,12 +108,12 @@ object SnapshotBootstrap {
       // silently serve future changes with no initial state)
       val delta = resources.filterNot(cat.snapshotDone)
       if (delta.isEmpty) return Resumed
-      // an existing slot cannot export a new snapshot; a fresh REPEATABLE
+      // an existing slot cannot pin a new snapshot; a fresh REPEATABLE
       // READ transaction is the consistency unit, its boundary the captured
       // WAL position. No marker: an interrupted delta leaves the resources
       // unledgered and is simply retried next start (at-least-once).
       val boundary = cat.openDeltaTransaction()
-      delta.foreach(r => cat.snapshotResource(r, "", boundary))
+      delta.foreach(r => cat.snapshotResource(r, boundary))
       cat.flushSink()
       delta.foreach(cat.recordSnapshotDone)
       return DeltaSnapshotted(boundary, delta)
@@ -122,13 +125,12 @@ object SnapshotBootstrap {
     cat.clearSnapshotLedger()
 
     if (resources.isEmpty) {
-      val (point, _) = cat.createSlot(slot)
-      return NoSnapshotNeeded(point)
+      return NoSnapshotNeeded(cat.createSlot(slot))
     }
 
     cat.createMarker(marker) // durable flag FIRST
-    val (point, snapshotName) = cat.createSlot(slot)
-    resources.foreach(r => cat.snapshotResource(r, snapshotName, point))
+    val point = cat.createSlot(slot)
+    resources.foreach(r => cat.snapshotResource(r, point))
     cat.flushSink() // READ events must be delivered before the flag drops
     // ledger before the marker drops: a crash in between redoes the full
     // snapshot (marker wins); the reverse order would leave delivered

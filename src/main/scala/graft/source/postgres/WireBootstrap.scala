@@ -22,10 +22,9 @@ import graft.source.pgoutput.PgOutputMessage.{NullDatum, TextDatum}
   *     `consistent_point` (the dedup boundary consumers key on),
   *  4. hand the session to CopyBoth streaming from that same point.
   *
-  * At cluster scale the snapshot phase is instead a partitioned
-  * [[JdbcSnapshot]] batch job under an `EXPORT_SNAPSHOT` name (massively
-  * parallel scan straight to the sink); this single-session cursor path is
-  * the zero-dependency bootstrap and the semantics oracle for both.
+  * This is graft's only snapshot: the initial scan is phase 0 of the one
+  * replayable source, on the same session that [[Preflight]] checked and
+  * that streams afterwards.
   */
 object WireBootstrap {
 
@@ -55,17 +54,15 @@ object WireBootstrap {
       }
     } else false
 
-  final case class SlotCreated(consistentPoint: Long, snapshotName: Option[String])
-
-  /** CREATE_REPLICATION_SLOT, reading `consistent_point` / `snapshot_name`
-    * from the result row BY NAME (column order is not part of the contract). */
-  def createSlot(s: PgSession, slot: String,
-      mode: Replication.SnapshotMode): SlotCreated = {
-    val r = s.simpleQuery(Replication.createSlot(slot, mode))
-    val point = r.single("consistent_point").getOrElse(
-      throw new IllegalStateException(
-        s"CREATE_REPLICATION_SLOT returned no consistent_point for $slot"))
-    SlotCreated(ChangeEvent.lsnValue(point), r.single("snapshot_name"))
+  /** CREATE_REPLICATION_SLOT, reading `consistent_point` from the result
+    * row BY NAME (column order is not part of the contract). */
+  private def createSlot(s: PgSession, slot: String,
+      mode: Replication.SnapshotMode): Long = {
+    val point = s.simpleQuery(Replication.createSlot(slot, mode))
+      .single("consistent_point").getOrElse(
+        throw new IllegalStateException(
+          s"CREATE_REPLICATION_SLOT returned no consistent_point for $slot"))
+    ChangeEvent.lsnValue(point)
   }
 
   /** Cursor-batched scan of one resource under the pinned snapshot; every row
@@ -119,22 +116,17 @@ object WireBootstrap {
     override def slotExists(slot: String): Boolean =
       WireBootstrap.slotExists(s, slot)
 
-    override def createSlot(slot: String): (Long, String) =
+    override def createSlot(slot: String): Long =
       if (needsSnapshot) {
         s.simpleQuery("BEGIN ISOLATION LEVEL REPEATABLE READ")
         inTx = true
-        val sc = WireBootstrap.createSlot(s, slot, Replication.UseSnapshot)
-        (sc.consistentPoint, sc.snapshotName.getOrElse("use_snapshot"))
-      } else {
-        val sc = WireBootstrap.createSlot(s, slot, Replication.NoExportSnapshot)
-        (sc.consistentPoint, "")
-      }
+        WireBootstrap.createSlot(s, slot, Replication.UseSnapshot)
+      } else WireBootstrap.createSlot(s, slot, Replication.NoSnapshot)
 
     override def dropSlot(slot: String): Unit =
       s.simpleQuery(Replication.dropSlot(slot))
 
-    override def snapshotResource(resource: String, snapshotName: String,
-        boundaryLsn: Long): Unit = {
+    override def snapshotResource(resource: String, boundaryLsn: Long): Unit = {
       scanResource(s, resource, boundaryLsn, nowS)(emit)
       ()
     }

@@ -21,8 +21,7 @@ import scala.collection.mutable.ArrayBuffer
   *  - '''Bounded memory''': the driver holds at most `chunkRows` events —
   *    each full chunk is delivered and dropped, so the cursor scan's memory
   *    bound survives arbitrarily large tables (the reference streams
-  *    snapshot rows through the same bounded pipeline as changes;
-  *    at cluster scale the partitioned JdbcSnapshot path applies).
+  *    snapshot rows through the same bounded pipeline as changes).
   *
   * `flush()` is the delivery barrier [[graft.source.postgres.SnapshotBootstrap]]
   * requires before the marker drops: when it returns, every emitted event is

@@ -138,9 +138,7 @@ object StreamingPipeline {
       kafkaFrame(walStream(spark, walDir, maxEventsPerBatch, sliceEvents), streams),
       streams)
     val frameProducer: Option[graft.sink.FrameProducer] =
-      producer.orElse(kafkaBootstrap.map(b =>
-        graft.sink.kafka.WireFrameProducer.fromBootstrap(b)
-          .getOrElse(new graft.sink.KafkaFrameProducer(b))))
+      producer.orElse(kafkaBootstrap.map(graft.sink.FrameProducer.forBootstrap))
 
     val writer: DataStreamWriter[Row] = frameProducer match {
       case Some(p) =>

@@ -1,6 +1,6 @@
 package graft
 
-import graft.source.postgres.{PgWire, ScramSha256}
+import graft.source.postgres.{PgWire, ScramSha256, Scram => ScramCore}
 import java.io.{DataInputStream, DataOutputStream, EOFException}
 import java.net.{ServerSocket, SocketTimeoutException}
 import java.nio.ByteBuffer
@@ -71,6 +71,9 @@ final class FakeWalsender(auth: FakeWalsender.Auth,
     * snapshot scan sees (rows freeze at slot creation — snapshot isolation). */
   val tables = new java.util.concurrent.ConcurrentHashMap[
     String, (Seq[(String, Int)], Seq[Seq[String]])]()
+  /** Tables of `tables` set to REPLICA IDENTITY FULL (the pre-flight's
+    * relreplident probe answers 'f' for these, 'd' for the rest). */
+  val fullIdentity = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
   /** Every simple query received, in order (assertion surface). */
   val queriesSeen = new java.util.concurrent.CopyOnWriteArrayList[String]()
   /** When a received simple query equals this, the server sends a
@@ -227,17 +230,18 @@ final class FakeWalsender(auth: FakeWalsender.Auth,
         val proof = Base64.getDecoder.decode(
           clientFinal.substring(clientFinal.indexOf(",p=") + 3))
         val authMessage = s"$clientFirstBare,$serverFirst,$withoutProof"
-        val salted = ScramSha256.hi(password, salt, iters)
-        val clientKey = ScramSha256.hmac(salted, "Client Key".getBytes(UTF_8))
-        val storedKey = ScramSha256.h(clientKey)
-        val expectedProof = ScramSha256.xor(clientKey,
-          ScramSha256.hmac(storedKey, authMessage.getBytes(UTF_8)))
+        val alg = ScramCore.Sha256
+        val salted = ScramCore.hi(alg, password, salt, iters)
+        val clientKey = ScramCore.hmac(alg, salted, "Client Key".getBytes(UTF_8))
+        val storedKey = ScramCore.h(alg, clientKey)
+        val expectedProof = ScramCore.xor(clientKey,
+          ScramCore.hmac(alg, storedKey, authMessage.getBytes(UTF_8)))
         if (!java.util.Arrays.equals(proof, expectedProof)) {
           sendError("password authentication failed for user \"" + user + "\"")
           sock.close(); return
         }
-        val serverKey = ScramSha256.hmac(salted, "Server Key".getBytes(UTF_8))
-        val serverSig = ScramSha256.hmac(serverKey, authMessage.getBytes(UTF_8))
+        val serverKey = ScramCore.hmac(alg, salted, "Server Key".getBytes(UTF_8))
+        val serverSig = ScramCore.hmac(alg, serverKey, authMessage.getBytes(UTF_8))
         sendAuth(12,
           s"v=${Base64.getEncoder.encodeToString(serverSig)}".getBytes(UTF_8))
     }
@@ -294,14 +298,27 @@ final class FakeWalsender(auth: FakeWalsender.Auth,
     val DeclareRe = "DECLARE (\\w+) CURSOR FOR SELECT \\* FROM ([\\w.]+)".r
     val FetchRe = "FETCH FORWARD (\\d+) FROM (\\w+)".r
     val CloseRe = "CLOSE (\\w+)".r
-    val SetSnapshotRe = "SET TRANSACTION SNAPSHOT '([^']+)'".r
+    // pre-flight catalog probes (validator shapes): answered from `tables`
+    val ServerVersionRe = "SELECT current_setting\\('server_version_num'\\)::int >= (\\d+)".r
+    val WalLevelRe = "SELECT current_setting\\('wal_level'\\) = '(\\w+)'".r
+    val RegclassRe = "SELECT to_regclass\\('([^']+)'\\) IS NOT NULL".r
+    val ColumnRe = ("(?s)SELECT EXISTS \\(SELECT 1 FROM pg_attribute\\s+" +
+      "WHERE attrelid = to_regclass\\('([^']+)'\\)\\s+" +
+      "AND attname = '([^']+)' AND NOT attisdropped\\)").r
+    val ReplIdentRe = ("SELECT relreplident = '(\\w)' FROM pg_class " +
+      "WHERE oid = to_regclass\\('([^']+)'\\)").r
+
+    def sendBool(b: Boolean): Unit = {
+      sendRowDescription(Seq(("?column?", 16)))
+      sendDataRow(Seq(if (b) "t" else "f"))
+      sendComplete("SELECT 1")
+    }
 
     var inTx = false
     var snapshotPinned = false
     // rows frozen at slot-create time: the snapshot scan must see exactly
     // these, regardless of later `tables` mutations (snapshot isolation)
     var frozen: Map[String, (Seq[(String, Int)], Seq[Seq[String]])] = Map.empty
-    var exportedSnapshotName: String = null
     val cursors = scala.collection.mutable.Map.empty[String, (String, Int)]
     var inCopyBoth = false
 
@@ -356,15 +373,31 @@ final class FakeWalsender(auth: FakeWalsender.Auth,
               import scala.jdk.CollectionConverters._
               tables.asScala.toMap
             }
-            val snapName = if (m == "EXPORT_SNAPSHOT") {
-              exportedSnapshotName = f"${point}%08X-1"; exportedSnapshotName
-            } else null
+            val snapName = if (m == "EXPORT_SNAPSHOT") f"${point}%08X-1" else null
             if (m == "USE_SNAPSHOT") snapshotPinned = true
             sendRowDescription(Seq(("slot_name", 25), ("consistent_point", 25),
               ("snapshot_name", 25), ("output_plugin", 25)))
             sendDataRow(Seq(name, lsnText(point), snapName, "pgoutput"))
             sendComplete("CREATE_REPLICATION_SLOT")
           }
+          sendReady()
+        case ServerVersionRe(min) =>
+          sendBool(160004 >= min.toInt); sendReady() // server_version 16.4
+        case WalLevelRe(level) =>
+          sendBool(level == "logical"); sendReady()
+        case RegclassRe(resource) =>
+          sendBool(tables.containsKey(resource)); sendReady()
+        case ColumnRe(resource, column) =>
+          sendBool(Option(tables.get(resource)).exists(_._1.exists(_._1 == column)))
+          sendReady()
+        case ReplIdentRe(ident, resource) =>
+          // no pg_class row for a missing table: an empty result
+          sendRowDescription(Seq(("?column?", 16)))
+          if (tables.containsKey(resource)) {
+            val actual = if (fullIdentity.contains(resource)) "f" else "d"
+            sendDataRow(Seq(if (actual == ident) "t" else "f"))
+            sendComplete("SELECT 1")
+          } else sendComplete("SELECT 0")
           sendReady()
         case DropSlotRe(name) =>
           slots.remove(name); sendComplete("DROP_REPLICATION_SLOT"); sendReady()
@@ -437,17 +470,12 @@ final class FakeWalsender(auth: FakeWalsender.Auth,
         case "COMMIT" =>
           inTx = false; snapshotPinned = false; cursors.clear()
           sendComplete("COMMIT"); sendReady()
-        case SetSnapshotRe(name) =>
-          if (name == exportedSnapshotName && inTx) {
-            snapshotPinned = true; sendComplete("SET")
-          } else sendQueryError(s"invalid snapshot identifier: \"$name\"", "22023")
-          sendReady()
         case DeclareRe(cur, resource) =>
           // the contract under test: a snapshot scan outside the pinned
           // snapshot would read an inconsistent boundary — reject it
           if (!snapshotPinned)
             sendQueryError("snapshot scan requires a pinned snapshot " +
-              "(USE_SNAPSHOT or SET TRANSACTION SNAPSHOT)", "0A000")
+              "(USE_SNAPSHOT or a REPEATABLE READ boundary)", "0A000")
           else if (!frozen.contains(resource))
             sendQueryError(s"""relation "$resource" does not exist""", "42P01")
           else { cursors(cur) = (resource, 0); sendComplete("DECLARE CURSOR") }

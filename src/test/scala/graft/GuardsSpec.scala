@@ -38,9 +38,12 @@ class GuardsSpec extends AnyFunSuite {
   }
 
   test("replication identifiers reject case-folding and injection hazards") {
-    assert(Replication.createSlot("graft_slot_1").contains("graft_slot_1"))
-    intercept[IllegalArgumentException](Replication.createSlot("Bad-Name"))
-    intercept[IllegalArgumentException](Replication.createSlot("x'; DROP TABLE t;--"))
+    assert(Replication.createSlot("graft_slot_1", Replication.UseSnapshot)
+      .contains("graft_slot_1"))
+    intercept[IllegalArgumentException](
+      Replication.createSlot("Bad-Name", Replication.UseSnapshot))
+    intercept[IllegalArgumentException](
+      Replication.createSlot("x'; DROP TABLE t;--", Replication.NoSnapshot))
     intercept[IllegalArgumentException](
       Replication.createPublication("pub", Seq("public.Order")))
     assert(Replication.declareCursor("c1", "public.users").contains("public.users"))

@@ -77,15 +77,16 @@ class MainE2ESpec extends AnyFunSuite {
     (proc.exitValue(), out.synchronized(out.toString))
   }
 
-  private def writeConfig(dir: String): String = {
-    val cfg = """{
+  private def writeConfig(dir: String,
+      operations: String = "\"insert\", \"read\""): String = {
+    val cfg = s"""{
       |  "source": {"type": "postgres", "postgres": {
       |    "connection_env": "GRAFT_PG_E2E",
       |    "slot_name": "graft_slot", "publication_name": "graft_pub"}},
       |  "sink": {"type": "kafka"},
       |  "streams": [
       |    {"name": "s_signup", "resource": "public.signup",
-      |     "operations": ["insert", "read"], "destination": "cdc.signup"}]
+      |     "operations": [$operations], "destination": "cdc.signup"}]
       |}""".stripMargin
     val p = Paths.get(dir, "config.json")
     Files.writeString(p, cfg)
@@ -188,6 +189,35 @@ class MainE2ESpec extends AnyFunSuite {
         case s: Status => s.flushed >= 0x902L
         case _ => false
       }, s"server never saw flushed >= 0/902: ${srv.statuses}")
+    } finally srv.close()
+  }
+
+  test("Main fails pre-flight before creating anything: a delete stream on a " +
+      "table without REPLICA IDENTITY FULL exits 1 naming the check and its fix") {
+    val base = Files.createTempDirectory("graft-main-preflight").toString
+    Files.createDirectories(Paths.get(s"$base/wal"))
+    val srv = new FakeWalsender(Trust)
+    srv.tables.put("public.signup",
+      (Seq(("id", 20), ("name", 25)), Seq(Seq("1", "alice"))))
+    try {
+      val (rc, out) = runMain(
+        Seq(writeConfig(base, "\"insert\", \"delete\""), s"$base/wal",
+          s"$base/ckpt", s"$base/out"),
+        Map("GRAFT_PG_E2E" ->
+          s"postgres://graft_user@${srv.host}:${srv.port}/appdb",
+          "SPARK_GRAFT_CPUS" -> "2"),
+        timeoutS = 120)
+      assert(rc == 1, s"must exit 1; output:\n$out")
+      assert(out.contains("replica_identity[public.signup]"),
+        s"failing check not named in:\n$out")
+      assert(out.contains("Fix: ALTER TABLE public.signup REPLICA IDENTITY FULL"),
+        s"fix hint missing in:\n$out")
+      import scala.jdk.CollectionConverters._
+      val seen = srv.queriesSeen.asScala.toSeq
+      assert(seen.exists(_.contains("relreplident")), s"no probe ran: $seen")
+      assert(!seen.exists(q => q.startsWith("CREATE PUBLICATION") ||
+        q.startsWith("CREATE_REPLICATION_SLOT")),
+        s"pre-flight failure must precede every catalog change: $seen")
     } finally srv.close()
   }
 

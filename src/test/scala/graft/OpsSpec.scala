@@ -14,14 +14,13 @@ class OpsSpec extends AnyFunSuite {
       == "CREATE PUBLICATION pub FOR TABLE public.users, public.orders")
     assert(Replication.createPublication("pub", Nil)
       == "CREATE PUBLICATION pub FOR ALL TABLES")
-    assert(Replication.createSlot("s") == "CREATE_REPLICATION_SLOT s LOGICAL pgoutput EXPORT_SNAPSHOT")
     assert(Replication.createSlot("s", Replication.UseSnapshot)
       == "CREATE_REPLICATION_SLOT s LOGICAL pgoutput USE_SNAPSHOT")
+    assert(Replication.createSlot("s", Replication.NoSnapshot)
+      == "CREATE_REPLICATION_SLOT s LOGICAL pgoutput NOEXPORT_SNAPSHOT")
     assert(Replication.startReplication("s", "pub", "0/1A2B3C") ==
       "START_REPLICATION SLOT s LOGICAL 0/1A2B3C " +
         "(proto_version '1', publication_names 'pub')")
-    assert(Replication.snapshotSessionSql("snap_1").head
-      .contains("REPEATABLE READ"))
     assert(Replication.fetchForward("c", 5000) == "FETCH FORWARD 5000 FROM c")
   }
 
@@ -37,15 +36,14 @@ class OpsSpec extends AnyFunSuite {
     def createMarker(m: String): Unit = { marker = true; log += "createMarker" }
     def dropMarker(m: String): Unit = { marker = false; log += "dropMarker" }
     def slotExists(s: String): Boolean = slot
-    def createSlot(s: String): (Long, String) = {
-      slot = true; snapshotValid = true; log += "createSlot"; (1000L, "snap_x")
+    def createSlot(s: String): Long = {
+      slot = true; snapshotValid = true; log += "createSlot"; 1000L
     }
     def dropSlot(s: String): Unit = { slot = false; log += "dropSlot" }
-    def snapshotResource(r: String, snap: String, lsn: Long): Unit = {
+    def snapshotResource(r: String, lsn: Long): Unit = {
       // a scan is only valid under a pinned slot snapshot (full path) or an
       // open delta transaction (resume path) — never outside either
-      assert((snapshotValid && snap == "snap_x" && lsn == 1000L) ||
-        (deltaOpen && snap == "" && lsn == 2000L))
+      assert((snapshotValid && lsn == 1000L) || (deltaOpen && lsn == 2000L))
       log += s"snapshot:$r"
     }
     def flushSink(): Unit = { deltaOpen = false; log += "flush" }

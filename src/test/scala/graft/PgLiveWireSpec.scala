@@ -3,7 +3,7 @@ package graft
 import graft.config.StreamDef
 import graft.model.{ChangeEvent, Op}
 import graft.source.pgoutput.{Converter, PgOutputDecoder, RelationRegistry}
-import graft.source.postgres.{PgSession, ReplicationSpooler, SnapshotBootstrap, WireBootstrap}
+import graft.source.postgres.{PgSession, Preflight, Replication, ReplicationSpooler, SnapshotBootstrap, WireBootstrap}
 import graft.source.wal.WalLog
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
@@ -224,6 +224,65 @@ class PgLiveWireSpec extends AnyFunSuite {
     } finally s.close()
   }
 
+  test("live preflight: a valid setup passes and bootstraps on the same " +
+      "session; every misconfiguration is reported at once; an erroring " +
+      "probe fails only its own check") {
+    live()
+    val admin = LivePostgres.session()
+    admin.simpleQuery("CREATE TABLE public.live_pf_full(" +
+      "id bigint PRIMARY KEY, acct bigint)")
+    admin.simpleQuery("ALTER TABLE public.live_pf_full REPLICA IDENTITY FULL")
+    admin.simpleQuery("INSERT INTO public.live_pf_full VALUES (1, 10)")
+    admin.simpleQuery("CREATE TABLE public.live_pf_default(" +
+      "id bigint PRIMARY KEY, v text)")
+    val s = LivePostgres.session()
+    try {
+      // misconfigured: a missing table (its routing key cannot exist
+      // either), a missing routing-key column, a delete stream on a table
+      // with the default identity — one exception lists all of them
+      val bad = intercept[Preflight.PreflightException] {
+        Preflight.requirePass(s, Seq(
+          StreamDef("gone", "public.live_pf_missing", Seq("insert"), "t1"),
+          StreamDef("badkey", "public.live_pf_full", Seq("insert"), "t2",
+            routingKey = "no_such_col"),
+          StreamDef("dels", "live_pf_default", Seq("insert", "delete"), "t3")))
+      }
+      assert(bad.failures.map(_.check.name) == Seq(
+        "table_exists[public.live_pf_missing]",
+        "routing_key[public.live_pf_missing.id]",
+        "routing_key[public.live_pf_full.no_such_col]",
+        "replica_identity[public.live_pf_default]"))
+      assert(bad.getMessage.contains(
+        "Fix: ALTER TABLE public.live_pf_default REPLICA IDENTITY FULL"))
+
+      // a probe the server rejects (too many dotted names makes
+      // to_regclass raise) fails its own checks; the checks after it run
+      val errored = Preflight.run(s, Seq(
+        StreamDef("dotted", "a.b.c.d", Seq("insert"), "t4"),
+        StreamDef("gone", "public.live_pf_missing", Seq("insert"), "t5")))
+      assert(errored.map(_.check.name) == Seq("table_exists[a.b.c.d]",
+        "routing_key[a.b.c.d.id]", "table_exists[public.live_pf_missing]",
+        "routing_key[public.live_pf_missing.id]"))
+      assert(errored.take(2).forall(_.detail.contains("query failed")))
+      assert(errored.drop(2).forall(_.detail == "check returned false"))
+
+      // valid: passes, and the same session then bootstraps (USE_SNAPSHOT
+      // after the probes' transactions), exactly as graft.Main runs it
+      val good = Seq(
+        StreamDef("full", "public.live_pf_full",
+          Seq("read", "insert", "update", "delete"), "t6", routingKey = "acct"),
+        StreamDef("plain", "live_pf_default", Seq("insert", "update"), "t7"))
+      Preflight.requirePass(s, good)
+      val reads = ArrayBuffer.empty[ChangeEvent]
+      val boot = WireBootstrap.bootstrap(s, "graft_pf_slot", "graft_pf_pub",
+        good, confirmedLsn = 0L, emit = reads += _, flushDelivery = () => ())
+      assert(boot.outcome.isInstanceOf[SnapshotBootstrap.Snapshotted])
+      assert(reads.map(_.data).toSeq == Seq("""{"id":1,"acct":10}"""))
+      s.simpleQuery(Replication.dropSlot("graft_pf_slot"))
+      s.simpleQuery(Replication.dropPublication("graft_pf_pub"))
+    } finally { s.close(); admin.close() }
+  }
+
   test("live full pipeline: postgres DML → wire pump → DSv2 source → sink; " +
       "confirmed_flush_lsn advances only after the sink epoch") {
     live()
@@ -311,62 +370,6 @@ class PgLiveWireSpec extends AnyFunSuite {
     } finally {
       pump.close()
       try sp.close() catch { case _: Throwable => () }
-      admin.close()
-    }
-  }
-
-  test("live parallel snapshot: N partitions adopt the SAME exported " +
-      "snapshot on their own connections and see identical pre-slot state " +
-      "despite concurrent DML") {
-    live()
-    import graft.source.postgres.WireSnapshot
-    val admin = LivePostgres.session()
-    admin.simpleQuery("CREATE TABLE public.live_snap(" +
-      "id bigint PRIMARY KEY, v bigint)")
-    admin.simpleQuery("INSERT INTO public.live_snap " +
-      "SELECT i, i * 7 FROM generate_series(1, 1000) AS g(i)")
-    // the exporting session: slot created with EXPORT_SNAPSHOT (must NOT be
-    // inside a transaction block on a walsender); the snapshot stays
-    // importable only while this session stays OPEN AND IDLE — no further
-    // command until the distributed scan completes
-    val exporter = LivePostgres.session()
-    val slot = WireBootstrap.createSlot(exporter, "graft_psnap_slot",
-      graft.source.postgres.Replication.ExportSnapshot)
-    val snapName = slot.snapshotName.getOrElse(fail("no snapshot_name"))
-    // post-slot DML that the snapshot must NOT see
-    admin.simpleQuery("INSERT INTO public.live_snap " +
-      "SELECT i, 0 FROM generate_series(1001, 1100) AS g(i)")
-    admin.simpleQuery("UPDATE public.live_snap SET v = -1 WHERE id <= 500")
-    admin.simpleQuery("DELETE FROM public.live_snap WHERE id BETWEEN 900 AND 1000")
-    try {
-      val spark = SparkTestBase.spark
-      val df = WireSnapshot.scan(spark,
-        LivePostgres.endpoint(LivePostgres.SuperUser, None), snapName,
-        "public.live_snap", "id", numPartitions = 4,
-        boundaryLsn = slot.consistentPoint).cache()
-      assert(df.rdd.getNumPartitions == 4, "scan must fan out as planned")
-      // exactly the 1000 pre-slot rows — none of the 100 post-slot inserts,
-      // none of the updates, all 101 post-slot-deleted rows still visible
-      assert(df.count() == 1000)
-      import org.apache.spark.sql.functions.{col, get_json_object, sum}
-      val ids = df.select(
-        get_json_object(col("data"), "$.id").cast("long").as("id"),
-        get_json_object(col("data"), "$.v").cast("long").as("v"))
-      assert(ids.agg(sum("id")).head().getLong(0) == 500500L,
-        "id set must be exactly 1..1000")
-      assert(ids.agg(sum("v")).head().getLong(0) == 500500L * 7,
-        "values must be the PRE-update state in every partition")
-      assert(df.select("op").distinct().collect().map(_.getString(0)).toSeq
-        == Seq("READ"))
-      assert(df.select("lsn").distinct().count() == 1,
-        "every partition stamps the one consistent point")
-    } finally {
-      // first command after the scan — this invalidates the exported
-      // snapshot, which is fine now that every partition has committed
-      try exporter.simpleQuery(
-        graft.source.postgres.Replication.dropSlot("graft_psnap_slot"))
-      catch { case _: Throwable => () }
-      exporter.close()
       admin.close()
     }
   }
@@ -488,46 +491,6 @@ class PgLiveWireSpec extends AnyFunSuite {
       // the real decoder plugin announced the widened relation in-stream
       assert(evs(1)._1.data == """{"id":3,"v":"c","note":"fresh"}""")
     } finally { sp.close(); admin.close() }
-  }
-
-  test("live sparse-key parallel snapshot: PK range spanning the long " +
-      "extremes splits without overflow — every row lands in exactly one " +
-      "partition's cursor") {
-    live()
-    import graft.source.postgres.WireSnapshot
-    val admin = LivePostgres.session()
-    admin.simpleQuery("CREATE TABLE public.live_sparse(" +
-      "id bigint PRIMARY KEY, v bigint)")
-    // keys spread across nearly the whole bigint domain — the span is far
-    // over Long.Max/n, the exact regime where naive long range math wraps
-    // into overlapping (duplicating) or inverted (LOSING) ranges
-    admin.simpleQuery("INSERT INTO public.live_sparse VALUES " +
-      "(-9223372036854775800, 1), (-4611686018427387904, 2), (-1, 3), " +
-      "(0, 4), (1, 5), (4611686018427387904, 6), (9223372036854775800, 7)")
-    val exporter = LivePostgres.session()
-    val slot = WireBootstrap.createSlot(exporter, "graft_sparse_slot",
-      graft.source.postgres.Replication.ExportSnapshot)
-    val snapName = slot.snapshotName.getOrElse(fail("no snapshot_name"))
-    try {
-      val spark = SparkTestBase.spark
-      val df = WireSnapshot.scan(spark,
-        LivePostgres.endpoint(LivePostgres.SuperUser, None), snapName,
-        "public.live_sparse", "id", numPartitions = 7,
-        boundaryLsn = slot.consistentPoint).cache()
-      // all 7 rows, each exactly once (no range overlap), none lost (no
-      // inverted/gapped range)
-      assert(df.count() == 7)
-      import org.apache.spark.sql.functions.{col, get_json_object}
-      val vs = df.select(get_json_object(col("data"), "$.v").cast("long"))
-        .collect().map(_.getLong(0)).sorted.toSeq
-      assert(vs == Seq(1L, 2L, 3L, 4L, 5L, 6L, 7L), s"got $vs")
-    } finally {
-      try exporter.simpleQuery(
-        graft.source.postgres.Replication.dropSlot("graft_sparse_slot"))
-      catch { case _: Throwable => () }
-      exporter.close()
-      admin.close()
-    }
   }
 
   test("live delta snapshot: a read-opted table ADDED after bootstrap gets " +

@@ -1,6 +1,6 @@
 package graft
 
-import graft.source.postgres.{PgTls, ReplicationWire, SocketCopyBothChannel}
+import graft.source.postgres.{PgSession, PgTls, ReplicationWire, SocketCopyBothChannel}
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 
@@ -20,10 +20,9 @@ class PgTlsSpec extends AnyFunSuite {
 
   private def connectTls(srv: FakeWalsender, ssl: PgTls.SslConfig,
       password: Option[String] = None): SocketCopyBothChannel =
-    SocketCopyBothChannel.connect(
-      Endpoint(srv.host, srv.port, "graft_user", "appdb", password, ssl),
-      slot = "graft_slot", publication = "graft_pub", startLsn = "0/0",
-      readTimeoutMs = 100)
+    PgSession.connect(
+      Endpoint(srv.host, srv.port, "graft_user", "appdb", password, ssl))
+      .startReplication("graft_slot", "graft_pub", "0/0", readTimeoutMs = 100)
 
   test("sslmode is validated at construction, before any socket") {
     intercept[IllegalArgumentException] { PgTls.SslConfig("requird") }

@@ -233,7 +233,7 @@ class WalStreamSpec extends AnyFunSuite {
   }
 
   test("preflight check SQL matches the validator contract") {
-    import graft.metrics.PreflightChecks._
+    import graft.source.postgres.Preflight._
     assert(serverVersion.contains("server_version_num"))
     assert(walLevel.contains("wal_level"))
     assert(tableExists("public.users").contains("to_regclass"))

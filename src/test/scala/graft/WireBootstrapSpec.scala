@@ -81,7 +81,7 @@ class WireBootstrapSpec extends AnyFunSuite {
     // the r3 gap, demonstrated: streaming against an assumed-existing slot
     // has nothing to stream from on a fresh database
     val refused = intercept[IllegalStateException] {
-      SocketCopyBothChannel.connect(ep(srv), "graft_slot", "graft_pub", "0/0")
+      PgSession.connect(ep(srv)).startReplication("graft_slot", "graft_pub", "0/0")
     }
     assert(refused.getMessage.contains("does not exist"))
     srv.close()

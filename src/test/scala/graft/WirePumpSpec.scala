@@ -2,7 +2,7 @@ package graft
 
 import graft.metrics.GraftMetrics
 import graft.operators.Routing
-import graft.source.postgres.{ReplicationSpooler, ReplicationWire, SocketCopyBothChannel, WirePump}
+import graft.source.postgres.{PgSession, ReplicationSpooler, ReplicationWire, SocketCopyBothChannel, WirePump}
 import graft.source.wal.{WalFixture, WalLog}
 import graft.streaming.{MultiSlot, StreamingPipeline}
 import graft.streaming.MultiSlot.SlotSpec
@@ -22,10 +22,9 @@ class WirePumpSpec extends AnyFunSuite {
   import SocketCopyBothChannel.Endpoint
 
   private def connectTo(srv: FakeWalsender): SocketCopyBothChannel =
-    SocketCopyBothChannel.connect(
-      Endpoint(srv.host, srv.port, "graft_user", "appdb", None),
-      slot = "graft_slot", publication = "graft_pub", startLsn = "0/0",
-      readTimeoutMs = 50)
+    PgSession.connect(
+      Endpoint(srv.host, srv.port, "graft_user", "appdb", None))
+      .startReplication("graft_slot", "graft_pub", "0/0", readTimeoutMs = 50)
 
   private def sendEvents(srv: FakeWalsender, seen: mutable.Set[String],
       ids: Range): Long = {
